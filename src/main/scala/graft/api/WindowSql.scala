@@ -264,7 +264,7 @@ object WindowSql {
           sys.error(s"${a.name}: the ${SlidingWindows.cateBaseKind(a.kind)} cate " +
             "family needs a numeric value column")
         if (vStr && (a.kind == "median" ||
-          !(a.kind == "count" || a.kind == "count_where" ||
+          !(a.kind == "count" || a.kind == "count_where" || a.kind == "top" ||
             SlidingWindows.cmKinds.contains(a.kind))))
           sys.error(s"${a.name}: ${a.kind} needs a numeric value column")
         val useStr = vStr && a.kind != "count" && a.kind != "count_where"

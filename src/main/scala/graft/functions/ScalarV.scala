@@ -24,8 +24,51 @@ object SV {
   final case class StrV(v: String) extends SV { def format: String = v }
   final case class BoolV(v: Boolean) extends SV { def format: String = v.toString }
 
-  /** %.6f then trim trailing zeros and trailing '.', empty -> "0". */
+  /** %.6f then trim trailing zeros and trailing '.', empty -> "0".
+    *
+    * `%.6f` rounds half-up at the 6th decimal — not the exact binary
+    * value but the decimal digits the JDK prints for it, which lie within
+    * half an ulp of it. So when no half-way point k.5e-6 lies within a few
+    * ulps of `v`, rounding `v * 1e6` gives the same digits, and the fast
+    * path builds them directly; otherwise (near-ties, |v| >= 1e9, NaN,
+    * infinities) it falls back to the formatter. Negative values,
+    * including -0.0 and tiny negatives that round to zero, keep their '-'
+    * as `%.6f` does. */
   def formatFloat(v: Double): String = {
+    val a = math.abs(v)
+    if (a < 1e9) {
+      val x = a * 1e6
+      val fl = math.floor(x)
+      val frac = x - fl
+      // covers the product's rounding error and the printed digits' distance from v
+      val margin = 2e6 * math.ulp(a) + math.ulp(x)
+      if (math.abs(frac - 0.5) > margin) {
+        val r = fl.toLong + (if (frac > 0.5) 1L else 0L)
+        return plain(java.lang.Double.compare(v, 0.0) < 0, r)
+      }
+    }
+    formatted(v)
+  }
+
+  /** `r` millionths as `[-]int[.frac]` with the fraction's trailing zeros trimmed. */
+  private def plain(neg: Boolean, r: Long): String = {
+    val sb = new java.lang.StringBuilder(24)
+    if (neg) sb.append('-')
+    sb.append(r / 1000000L)
+    var f = r % 1000000L
+    if (f != 0) {
+      var digits = 6
+      while (f % 10 == 0) { f /= 10; digits -= 1 }
+      sb.append('.')
+      val fs = java.lang.Long.toString(f)
+      var z = digits - fs.length
+      while (z > 0) { sb.append('0'); z -= 1 }
+      sb.append(fs)
+    }
+    sb.toString
+  }
+
+  private def formatted(v: Double): String = {
     val s = String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
     var end = s.length
     while (end > 0 && s.charAt(end - 1) == '0') end -= 1

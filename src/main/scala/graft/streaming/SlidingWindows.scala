@@ -34,9 +34,9 @@ import graft.functions.SV
   * variance) plus the ML family the reference registers as retractable
   * UDAFs over the same windows (top, topn_frequency, top1_ratio,
   * {sum,avg,count,min,max}_cate — aggregates/mod.rs:184-199): tiles carry
-  * count-map / per-category payloads so ML frames are also
-  * O(buckets + edge), the reference's retractable-accumulator answer to
-  * per-row frame recomputation (retractable_range.rs:54-140).
+  * bounded top-n / count-map / per-category payloads so ML frames are
+  * also O(buckets + edge), the reference's retractable-accumulator answer
+  * to per-row frame recomputation (retractable_range.rs:54-140).
   *
   * Like the reference's window expressions, each aggregate evaluates its
   * OWN argument columns: state rows carry a slot array of numeric values
@@ -82,13 +82,14 @@ object SlidingWindows {
                            vIdx: Int = 0, cIdx: Int = 0, vStr: Boolean = false,
                            wIdx: Int = -1)
 
-  /** The count-map family: the top kinds plus `distinct_count` (distinct
-    * values in the frame — the canonical "distinct users in the last
-    * hour" feature) and `median` (exact frame median, the
-    * robust-statistic feature; numeric only). All ride the same per-value
-    * count-map tile payload the top kinds already carry, so tiles merge
-    * them for free. */
-  val cmKinds: Set[String] = Set("top", "topn_frequency", "top1_ratio",
+  /** The count-map family: the kinds that need every value's whole count
+    * — `topn_frequency`, `top1_ratio`, `distinct_count` (distinct values
+    * in the frame — the canonical "distinct users in the last hour"
+    * feature) and `median` (exact frame median, the robust-statistic
+    * feature; numeric only). All ride one per-value count-map tile
+    * payload, so tiles merge them for free. `top` needs only the n
+    * largest values and rides the bounded [[TopNum]]/[[TopStr]] payload. */
+  val cmKinds: Set[String] = Set("topn_frequency", "top1_ratio",
     "distinct_count", "median")
   /** Condition-masked base aggregates (no category). */
   val whereBaseKinds: Set[String] =
@@ -111,6 +112,8 @@ object SlidingWindows {
   private[streaming] final case class Needs(
       nNum: Int, nStr: Int,
       cmNum: Array[Boolean], cmStr: Array[Boolean],
+      /** per slot: the largest `n` of the RANGE `top` specs on it; 0 = none. */
+      topNum: Array[Int], topStr: Array[Int],
       /** (vIdx, cIdx, wIdx): per-category [count,sum,min,max]; wIdx = -1 unmasked. */
       catePairs: Array[(Int, Int, Int)],
       /** (vIdx, wIdx): masked base stats [count,sum,sum2,min,max]. */
@@ -120,6 +123,7 @@ object SlidingWindows {
 
   private[streaming] def needsOf(specs: Seq[AggSpec], nNum: Int, nStr: Int): Needs = {
     val cmNum = new Array[Boolean](nNum); val cmStr = new Array[Boolean](nStr)
+    val topNum = new Array[Int](nNum); val topStr = new Array[Int](nStr)
     val pairs = mutable.LinkedHashSet.empty[(Int, Int, Int)]
     val masked = mutable.LinkedHashSet.empty[(Int, Int)]
     val ratios = mutable.LinkedHashSet.empty[(Int, Int)]
@@ -136,13 +140,18 @@ object SlidingWindows {
       if (cmKinds.contains(s.kind) && tiled) {
         if (s.vStr) cmStr(s.vIdx) = true else cmNum(s.vIdx) = true
       }
+      if (s.kind == "top" && tiled) {
+        if (s.vStr) topStr(s.vIdx) = math.max(topStr(s.vIdx), s.n)
+        else topNum(s.vIdx) = math.max(topNum(s.vIdx), s.n)
+      }
       if (tiled) {
         if (isCate(s.kind)) pairs += ((s.vIdx, s.cIdx, s.wIdx))
         else if (isRatioKind(s.kind)) ratios += ((s.cIdx, s.wIdx))
         else if (whereBaseKinds(s.kind)) masked += ((s.vIdx, s.wIdx))
       }
     }
-    Needs(nNum, nStr, cmNum, cmStr, pairs.toArray, masked.toArray, ratios.toArray)
+    Needs(nNum, nStr, cmNum, cmStr, topNum, topStr, pairs.toArray, masked.toArray,
+      ratios.toArray)
   }
 
   def outputSchema(specs: Seq[AggSpec], valueCols: Seq[String],
@@ -180,8 +189,83 @@ object SlidingWindows {
   // Tiles and per-key state
   // ------------------------------------------------------------------
 
+  /** The `cap` largest values folded in, best first, duplicates kept — the
+    * bounded `top(v, n)` payload of tiles and frame accumulators (the
+    * reference evaluates `top` with a bounded heap, top/heap.rs:158), so a
+    * frame's `top` costs O(n) per tile instead of a merge of every
+    * distinct value. Equal values keep arrival order and the latest is
+    * evicted first, so a run of equal values renders as its first arrival:
+    * 0.0 and -0.0 compare equal and render with the sign of the first zero
+    * folded, as the per-value count map `top` used to ride kept its first
+    * key. NaN ranks below every number.
+    */
+  private[streaming] final class TopNum(val cap: Int) extends Serializable {
+    private val vals = new Array[Double](cap)
+    private var len = 0
+
+    /** `a` ranks strictly ahead of `b` (NaN last). */
+    @inline private def ahead(a: Double, b: Double): Boolean =
+      a > b || (b != b && a == a)
+
+    /** Fold one value; false when it ranks outside the kept n. */
+    def add(v: Double): Boolean = {
+      if (len == cap && (cap == 0 || !ahead(v, vals(cap - 1)))) return false
+      var i = if (len == cap) cap - 1 else { len += 1; len - 1 }
+      while (i > 0 && ahead(v, vals(i - 1))) { vals(i) = vals(i - 1); i -= 1 }
+      vals(i) = v
+      true
+    }
+
+    /** Fold another list; stops at its first value that ranks outside. */
+    def addAll(o: TopNum): Unit = if (o != null) {
+      var i = 0
+      while (i < o.len && add(o.vals(i))) i += 1
+    }
+
+    /** Comma-joined, best first; a run of equal values renders as its first. */
+    def render: String = {
+      val sb = new java.lang.StringBuilder
+      var s: String = null
+      var i = 0
+      while (i < len) {
+        if (i > 0) sb.append(',')
+        if (i == 0 || vals(i) != vals(i - 1)) s = SV.formatFloat(vals(i))
+        sb.append(s)
+        i += 1
+      }
+      sb.toString
+    }
+  }
+
+  /** [[TopNum]] over string values (descending `compareTo`). */
+  private[streaming] final class TopStr(val cap: Int) extends Serializable {
+    private val vals = new Array[String](cap)
+    private var len = 0
+
+    def add(v: String): Boolean = {
+      if (len == cap && (cap == 0 || v.compareTo(vals(cap - 1)) <= 0)) return false
+      var i = if (len == cap) cap - 1 else { len += 1; len - 1 }
+      while (i > 0 && v.compareTo(vals(i - 1)) > 0) { vals(i) = vals(i - 1); i -= 1 }
+      vals(i) = v
+      true
+    }
+
+    def addAll(o: TopStr): Unit = if (o != null) {
+      var i = 0
+      while (i < o.len && add(o.vals(i))) i += 1
+    }
+
+    def render: String = {
+      val sb = new java.lang.StringBuilder
+      var i = 0
+      while (i < len) { if (i > 0) sb.append(','); sb.append(vals(i)); i += 1 }
+      sb.toString
+    }
+  }
+
   /** Tile: mergeable pre-aggregate of one time bucket, one stat set per
-    * numeric slot. Count-map (`top` family) and per-category (`*_cate`)
+    * numeric slot. Bounded `top`, count-map (`topn_frequency`,
+    * `top1_ratio`, `distinct_count`, `median`) and per-category (`*_cate`)
     * payloads only for the slots some spec needs (reference: tiles carry
     * accumulator state per agg — state/tiles.rs:62-70). Values are assumed
     * non-null (the reference's window args are).
@@ -196,6 +280,8 @@ object SlidingWindows {
       needs.cmNum.map(b => if (b) mutable.HashMap.empty[Double, Long] else null)
     val cmStr: Array[mutable.HashMap[String, Long]] =
       needs.cmStr.map(b => if (b) mutable.HashMap.empty[String, Long] else null)
+    val topNum: Array[TopNum] = needs.topNum.map(n => if (n > 0) new TopNum(n) else null)
+    val topStr: Array[TopStr] = needs.topStr.map(n => if (n > 0) new TopStr(n) else null)
     /** aligned with needs.catePairs: cate -> [count, sum, min, max]. */
     val cate: Array[mutable.HashMap[String, Array[Double]]] =
       Array.fill(needs.catePairs.length)(mutable.HashMap.empty)
@@ -216,13 +302,16 @@ object SlidingWindows {
         if (first || v < min(i)) min(i) = v
         if (first || v > max(i)) max(i) = v
         if (cmNum(i) != null) cmNum(i).update(v, cmNum(i).getOrElse(v, 0L) + 1L)
+        if (topNum(i) != null) topNum(i).add(v)
         i += 1
       }
       i = 0
       while (i < strs.length) {
         val s = strs(i)
-        if (cmStr(i) != null && s != null)
-          cmStr(i).update(s, cmStr(i).getOrElse(s, 0L) + 1L)
+        if (s != null) {
+          if (cmStr(i) != null) cmStr(i).update(s, cmStr(i).getOrElse(s, 0L) + 1L)
+          if (topStr(i) != null) topStr(i).add(s)
+        }
         i += 1
       }
       i = 0
@@ -281,6 +370,7 @@ object SlidingWindows {
         if (cmNum(i) != null) o.cmNum(i).foreach { case (v, n) =>
           cmNum(i).update(v, cmNum(i).getOrElse(v, 0L) + n)
         }
+        if (topNum(i) != null) topNum(i).addAll(o.topNum(i))
         i += 1
       }
       i = 0
@@ -288,6 +378,7 @@ object SlidingWindows {
         if (cmStr(i) != null) o.cmStr(i).foreach { case (s, n) =>
           cmStr(i).update(s, cmStr(i).getOrElse(s, 0L) + n)
         }
+        if (topStr(i) != null) topStr(i).addAll(o.topStr(i))
         i += 1
       }
       i = 0
@@ -432,6 +523,10 @@ object SlidingWindows {
       if (cmKinds.contains(spec.kind) && !spec.vStr) mutable.HashMap.empty else null
     val cmS: mutable.HashMap[String, Long] =
       if (cmKinds.contains(spec.kind) && spec.vStr) mutable.HashMap.empty else null
+    val topN: TopNum =
+      if (spec.kind == "top" && !spec.vStr) new TopNum(math.max(spec.n, 0)) else null
+    val topS: TopStr =
+      if (spec.kind == "top" && spec.vStr) new TopStr(math.max(spec.n, 0)) else null
     val cate: mutable.HashMap[String, Array[Double]] =
       if (isCate(spec.kind)) mutable.HashMap.empty else null
     val ratio: mutable.HashMap[String, Array[Long]] =
@@ -446,9 +541,13 @@ object SlidingWindows {
           if (count == 1 || v < min) min = v
           if (count == 1 || v > max) max = v
           if (cmN != null) cmN.update(v, cmN.getOrElse(v, 0L) + 1L)
-        } else if (cmS != null) {
+          if (topN != null) topN.add(v)
+        } else if (cmS != null || topS != null) {
           val s = strs(spec.vIdx)
-          if (s != null) cmS.update(s, cmS.getOrElse(s, 0L) + 1L)
+          if (s != null) {
+            if (cmS != null) cmS.update(s, cmS.getOrElse(s, 0L) + 1L)
+            if (topS != null) topS.add(s)
+          }
         }
       }
       if (cate != null) {
@@ -492,10 +591,12 @@ object SlidingWindows {
             if (cmN != null) t.cmNum(i).foreach { case (v, n) =>
               cmN.update(v, cmN.getOrElse(v, 0L) + n)
             }
-          } else if (cmS != null) {
-            t.cmStr(spec.vIdx).foreach { case (s, n) =>
+            if (topN != null) topN.addAll(t.topNum(i))
+          } else if (cmS != null || topS != null) {
+            if (cmS != null) t.cmStr(spec.vIdx).foreach { case (s, n) =>
               cmS.update(s, cmS.getOrElse(s, 0L) + n)
             }
+            if (topS != null) topS.addAll(t.topStr(spec.vIdx))
           }
           count += t.count
         }
@@ -532,13 +633,7 @@ object SlidingWindows {
       if (a.count > 0) math.sqrt(math.max(0.0, (a.count * a.sum2 - a.sum * a.sum)) / (a.count.toDouble * a.count)) else null
     case "stddev" | "stddev_samp" =>
       if (a.count > 1) math.sqrt(math.max(0.0, (a.count * a.sum2 - a.sum * a.sum)) / (a.count.toDouble * (a.count - 1))) else null
-    case "top" =>
-      if (spec.vStr)
-        takeWithDups(a.cmS.toSeq.sortBy(_._1)(Ordering[String].reverse)
-          .iterator.map { case (s, c) => (s, c) }, spec.n)
-      else
-        takeWithDups(a.cmN.toSeq.sortBy(-_._1)
-          .iterator.map { case (v, c) => (SV.formatFloat(v), c) }, spec.n)
+    case "top" => if (spec.vStr) a.topS.render else a.topN.render
     case "topn_frequency" =>
       if (spec.vStr)
         a.cmS.toSeq.sortWith { case ((v1, c1), (v2, c2)) =>
@@ -602,17 +697,6 @@ object SlidingWindows {
           }.take(spec.n).map(e => s"${e._1}:${e._3}")
         else entries.map(e => s"${e._1}:${e._3}").sorted
       parts.mkString(",")
-  }
-
-  private def takeWithDups(sorted: Iterator[(String, Long)], n: Int): String = {
-    val out = new mutable.ArrayBuffer[String](n)
-    var remaining = n
-    while (remaining > 0 && sorted.hasNext) {
-      val (s, cnt) = sorted.next()
-      var i = math.min(cnt, remaining.toLong)
-      while (i > 0) { out += s; i -= 1; remaining -= 1 }
-    }
-    out.mkString(",")
   }
 
   /** RANGE frame: tiles over fully-covered interior buckets, raw rows at
@@ -718,6 +802,29 @@ object SlidingWindows {
   private[streaming] def evalSpec(st: KeyState, spec: AggSpec, upIdx: Int,
                                   grans: Seq[Long], needs: Needs): Any =
     evalSpecIdx(st, spec, upIdx, grans, needs, specIdxOf(spec, needs))
+
+  /** Output row for buffer row `i`: (ts, key, numeric slots, string slots,
+    * one value per spec) as ONE flat values array — the shared emit step
+    * of both streaming engines and the batch sweep. `specIdx` is
+    * [[specIdxOf]] per spec, hoisted out of the per-row loop. */
+  private[streaming] def emitRow(st: KeyState, i: Int, key: String, specs: Array[AggSpec],
+                                 specIdx: Array[(Int, Int, Int)], grans: Seq[Long],
+                                 needs: Needs): Row = {
+    val (ts, _, nums, strs) = st.buffer(i)
+    val vals = new Array[Any](2 + nums.length + strs.length + specs.length)
+    vals(0) = ts; vals(1) = key
+    var c = 2
+    var k = 0
+    while (k < nums.length) { vals(c) = nums(k); c += 1; k += 1 }
+    k = 0
+    while (k < strs.length) { vals(c) = strs(k); c += 1; k += 1 }
+    k = 0
+    while (k < specs.length) {
+      vals(c) = evalSpecIdx(st, specs(k), i, grans, needs, specIdx(k))
+      c += 1; k += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
+  }
 
   /** Evaluate `specs` at a virtual point `atTs` over ONE key's rows — the
     * reference's point-request evaluation (aggregates/plain_points.rs,
@@ -867,23 +974,8 @@ object SlidingWindows {
       // skip already-emitted prefix
       while (i < buf.length && ordLeq(buf(i)._1, buf(i)._2, st.emittedTs, st.emittedSeq)) i += 1
       while (i < buf.length && buf(i)._1 <= wm) {
-        val (ts, seq, nums, strs) = buf(i)
-        // one flat values array per row — the Seq(..) ++ .. ++ .. chain
-        // built four intermediate collections per emitted row
-        val vals = new Array[Any](2 + nums.length + strs.length + specArr.length)
-        vals(0) = ts; vals(1) = key
-        var c = 2
-        var vi = 0
-        while (vi < nums.length) { vals(c) = nums(vi); c += 1; vi += 1 }
-        vi = 0
-        while (vi < strs.length) { vals(c) = strs(vi); c += 1; vi += 1 }
-        var sk = 0
-        while (sk < specArr.length) {
-          vals(c) = evalSpecIdx(st, specArr(sk), i, grans, needs, specIdx(sk))
-          c += 1; sk += 1
-        }
-        out += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
-        st.emittedTs = ts; st.emittedSeq = seq
+        out += emitRow(st, i, key, specArr, specIdx, grans, needs)
+        st.emittedTs = buf(i)._1; st.emittedSeq = buf(i)._2
         i += 1
       }
       val t3 = System.nanoTime()
@@ -955,6 +1047,8 @@ object SlidingWindows {
 
     val prepared = prepareMulti(df, keyCol, tsMsCol, valueCols, strCols,
       latenessMs = 0, watermark = false)
+    val specArr = specs.toArray
+    val specIdx = specArr.map(specIdxOf(_, needs))
 
     import prepared.sparkSession.implicits._
     prepared.as[(Long, String, Seq[Double], Seq[String])]
@@ -962,12 +1056,8 @@ object SlidingWindows {
       .flatMapGroups { (key: String, rows: Iterator[(Long, String, Seq[Double], Seq[String])]) =>
         val st = new KeyState
         ingestChunk(st, rows.map(r => (r._1, r._3.toArray, r._4.toArray)), grans, needs)
-        val buf = st.buffer
-        (0 until buf.length).iterator.map { i =>
-          val (ts, _, nums, strs) = buf(i)
-          val aggs = specs.map(evalSpec(st, _, i, grans, needs))
-          Row.fromSeq(Seq(ts, key) ++ nums ++ strs ++ aggs)
-        }
+        Iterator.range(0, st.buffer.length)
+          .map(emitRow(st, _, key, specArr, specIdx, grans, needs))
       }(outEnc)
   }
 

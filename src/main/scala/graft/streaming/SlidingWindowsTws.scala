@@ -73,11 +73,13 @@ object SlidingWindowsTws {
         key: String,
         rows: Iterator[(Long, String, Seq[Double], Seq[String], java.sql.Timestamp)],
         timerValues: TimerValues): Iterator[Row] =
-      process(key, rows, timerValues)
+      process(key, rows, timerValues, firedTs = 0L)
 
+    /** Spark deletes the fired timer itself once this returns
+      * (`TransformWithStateExec.handleTimerRows`), so `process` must not. */
     override def handleExpiredTimer(key: String, timerValues: TimerValues,
                                     expiredTimerInfo: ExpiredTimerInfo): Iterator[Row] =
-      process(key, Iterator.empty, timerValues)
+      process(key, Iterator.empty, timerValues, expiredTimerInfo.getExpiryTimeInMs())
 
     /** Insert one row into a bucket, keeping (ts, seq) order. */
     private def insertRow(bk: Bucket, row: (Long, Long, Array[Double], Array[String])): Unit = {
@@ -94,14 +96,17 @@ object SlidingWindowsTws {
       bk.tile.add(row._3, row._4)
     }
 
+    /** @param firedTs the timer Spark is firing for this call (0 = none):
+      *                it is gone once the call returns, so never deleted here. */
     private def process(
         key: String,
         rows: Iterator[(Long, String, Seq[Double], Seq[String], java.sql.Timestamp)],
-        timerValues: TimerValues): Iterator[Row] = {
+        timerValues: TimerValues, firedTs: Long): Iterator[Row] = {
       val m0 = Option(meta.get()).getOrElse(Meta(0L, Long.MinValue, Long.MinValue, 0L))
       var nextSeq = m0.nextSeq
       var emTs = m0.emittedTs; var emSeq = m0.emittedSeq
       val wm = timerValues.getCurrentWatermarkInMs()
+      def dropTimer(ts: Long): Unit = if (ts > 0 && ts != firedTs) getHandle.deleteTimer(ts)
 
       // materialize fresh rows (drop flush sentinels and pre-emitted)
       val fresh = mutable.ArrayBuffer.empty[(Long, Long, Array[Double], Array[String])]
@@ -139,7 +144,7 @@ object SlidingWindowsTws {
           val want = math.max(earliest, wm + 1)
           var timerTs = m0.timerTs
           if (want != timerTs) {
-            if (timerTs > 0) getHandle.deleteTimer(timerTs)
+            dropTimer(timerTs)
             getHandle.registerTimer(want)
             timerTs = want
           }
@@ -183,21 +188,8 @@ object SlidingWindowsTws {
       var i = 0
       while (i < buf.length && ordLeq(buf(i)._1, buf(i)._2, emTs, emSeq)) i += 1
       while (i < buf.length && buf(i)._1 <= wm) {
-        val (ts, seq, nums, strs) = buf(i)
-        val vals = new Array[Any](2 + nums.length + strs.length + specArr.length)
-        vals(0) = ts; vals(1) = key
-        var c = 2
-        var vi = 0
-        while (vi < nums.length) { vals(c) = nums(vi); c += 1; vi += 1 }
-        vi = 0
-        while (vi < strs.length) { vals(c) = strs(vi); c += 1; vi += 1 }
-        var sk = 0
-        while (sk < specArr.length) {
-          vals(c) = SlidingWindows.evalSpecIdx(st, specArr(sk), i, grans, needs, specIdx(sk))
-          c += 1; sk += 1
-        }
-        out += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
-        emTs = ts; emSeq = seq
+        out += SlidingWindows.emitRow(st, i, key, specArr, specIdx, grans, needs)
+        emTs = buf(i)._1; emSeq = buf(i)._2
         i += 1
       }
 
@@ -233,12 +225,12 @@ object SlidingWindowsTws {
       if (i < buf.length) {
         val want = math.max(buf(i)._1, wm + 1)
         if (want != timerTs) {
-          if (timerTs > 0) getHandle.deleteTimer(timerTs)
+          dropTimer(timerTs)
           getHandle.registerTimer(want)
           timerTs = want
         }
       } else if (timerTs > 0) {
-        getHandle.deleteTimer(timerTs)
+        dropTimer(timerTs)
         timerTs = 0L
       }
       meta.update(Meta(nextSeq, emTs, emSeq, timerTs))

@@ -103,6 +103,7 @@ object StreamingDedup {
                             threshold: Double = 0.8,
                             maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
+    require(bands <= 255, s"bands = $bands: the band key is one byte")
     val rpb = numHashes / bands
     val banded = bandedRows(df, idCol, textCol, k, numHashes, bands, rpb)
 
@@ -232,6 +233,7 @@ object StreamingDedup {
                                threshold: Double = 0.8,
                                maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
+    require(bands <= 255, s"bands = $bands: the band key is one byte")
     val rpb = numHashes / bands
     // Session-level side effect, needed at query start (see
     // [[StateStoreConf]]): bounded callers wrap build+run in

@@ -149,6 +149,29 @@ class SlidingWindowsSpec extends AnyFunSuite {
     assert(got == batchReference(events))
   }
 
+  test("transformWithState engine leaves the fired timer to Spark: no failed timer deletes") {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    spark.sparkContext // Spark (re)configures logging on start: attach after it
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("timer-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val timers = LoggerContext.getContext(false).getLogger(
+      "org.apache.spark.sql.execution.streaming.operators.stateful.transformwithstate.timers.TimerStateImpl")
+    timers.addAppender(capture)
+    val got = try {
+      val rnd = new scala.util.Random(99)
+      val batches = rnd.shuffle(events).sortBy(_._1).grouped(60).toSeq.map(b => rnd.shuffle(b))
+      runStreaming(batches, lateness = 120000, tileGran = 3000, tws = true)
+    } finally { timers.removeAppender(capture); capture.stop() }
+    assert(got == batchReference(events))
+    val failed = seen.toArray.map(_.toString).filter(_.contains("Failed to delete timer"))
+    assert(failed.isEmpty, s"${failed.length} failed timer deletes, e.g. ${failed.headOption}")
+  }
+
   /** Soak for the default (TWS) engine at the state shape the flip to
     * default assumes: thousands of distinct keys (granular per-bucket
     * MapState rows, per-key timers) plus one hot key holding ~20% of all

@@ -130,6 +130,24 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(pairs == Set((1L, 2L), (M, 3L), (M, 4L)), s"got $pairs")
   }
 
+  test("band count is checked against the one-byte band key on both engines") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    StateStoreConf.withSaved(spark) {
+      val docs = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+      // 257 bands would wrap band 256 onto band 0's key byte
+      Seq[Int => Any](
+        b => StreamingDedup.minhashStreamingPairs(docs, "doc_id", "text",
+          numHashes = b, bands = b),
+        b => StreamingDedup.minhashStreamingPairsTws(docs, "doc_id", "text",
+          numHashes = b, bands = b)).foreach { build =>
+        build(255)
+        val e = intercept[IllegalArgumentException](build(257))
+        assert(e.getMessage.contains("one byte"), e.getMessage)
+      }
+    }
+  }
+
   test("TWS append-only engine == FMGWS engine == batch, incl. cap and orientation") {
     assume(haveData)
     implicit val sqlCtx = spark.sqlContext
