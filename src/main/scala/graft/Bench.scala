@@ -226,8 +226,10 @@ object Bench {
                boxDriftStart: Double = -1.0, boxDriftEnd: Double = -1.0,
                cap: Int = 1800,
                errors: Seq[(String, String)] = Nil): String = {
+    // Jackson's escaper: newlines and control characters in an error
+    // message must not break the line as JSON
     def js(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
     // numeric fields via the Locale.ROOT `num` helper, never
     // f-interpolators (ADVICE r17): under a comma-decimal default locale
     // an f"" would emit "value":133,2 — invalid JSON, recreating the
@@ -257,7 +259,8 @@ object Bench {
     // fixed fields — a failure's NAME outranks the tail of queries_top,
     // which trims itself against whatever remains) so a mass failure
     // can't blow the tail window; n_failed keeps the true count either way.
-    val errBudget = math.min(600, cap - baseWith("{}").length)
+    // -3: the "{}" of queries_top and the final "}" come after the base
+    val errBudget = math.min(600, cap - baseWith("{}").length - 3)
     val errEntries = Seq.newBuilder[String]
     var errUsed = 0
     for ((n, m) <- errors) {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{col, expr, lit, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 import graft.functions.GraftFunctions
+import graft.streaming.LocalCheckpointFileManager
 
 /** Session bootstrap: scale-oriented defaults + the graft function family +
   * the driver testdata tables registered as temp views.
@@ -88,6 +89,8 @@ object GraftSession {
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "8388608")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // fork-free checkpoint I/O on file: paths (streaming/LocalCheckpointFileManager)
+      .config(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
 
   def create(master: String = "local[32]"): SparkSession = {
     val spark = builder(master).getOrCreate()

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 import graft.functions.GraftFunctions
 import graft.serving.{FeatureLookup, FeatureStore, LiveBuffer, RequestServer, ServingBuffer, ShardedFeatureStore, ShardedServingBuffer}
 import graft.sources.{Datagen, Kafka}
-import graft.streaming.SlidingWindows
+import graft.streaming.{LocalCheckpointFileManager, SlidingWindows}
 import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
 
 /** Pipeline-spec JSON front-end — the production entry point of the
@@ -113,6 +113,9 @@ object Pipeline {
     GraftFunctions.register(spark)
 
     val streamingMode = mode != "Batch"
+    // fork-free checkpoint I/O on file: paths, also on sessions graft did
+    // not build; a session-level effect (see LocalCheckpointFileManager.install)
+    if (streamingMode) LocalCheckpointFileManager.install(spark)
 
     // ---- per-operator overrides (pipeline.rs:33-55, overrides.rs) -------
     // Spark mapping: `parallelism` -> the shuffle/state partition count;

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.concurrent.Await
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
+
 /** Document deduplication operators for large-scale training-data pipelines.
   *
   * All variants are pure DataFrame compositions (codegen'd built-ins, no
@@ -425,29 +428,21 @@ object Dedup {
       // job via observe() (r20, guide §1.2: the old shape ran a SECOND
       // full pass over the just-checkpointed labels per round just to
       // sum them — one extra action x diameter rounds, a real cost when
-      // labels are every vertex). getOrEmpty, not get: if an engine
-      // version ever stopped reporting observed metrics from the
-      // checkpoint action, fall back to the explicit pass instead of
-      // hanging — same value either way.
+      // labels are every vertex). The metrics arrive on the async listener
+      // bus a beat after the eager checkpoint returns; if an engine version
+      // ever stopped reporting them from the checkpoint action, or the bus
+      // went silent, fall back to the explicit pass after a bounded wait
+      // instead of hanging — same value either way.
       val obs = org.apache.spark.sql.Observation(s"cc_labelsum_$iter")
       val next = labels.unionByName(fromNeighbors)
         .groupBy("id").agg(min(col("c")).as("c"))
         .observe(obs, sum(col("c").cast("decimal(38,0)")).as("s"))
         .localCheckpoint(true)
-      // the metrics arrive on the async listener bus a beat after the
-      // eager checkpoint returns; obs.get blocks, so bound the wait and
-      // fall back to the explicit pass if the bus ever went silent (the
-      // stranded waiter thread is daemon-pooled and bounded by maxIter)
-      val cur = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration._
-        try Await.result(Future(obs.get), 10.seconds).get("s") match {
-          case Some(d: java.math.BigDecimal) => d
-          case Some(null) => java.math.BigDecimal.ZERO
-          case None => labelSum(next)
-          case Some(other) => new java.math.BigDecimal(other.toString)
-        } catch { case _: java.util.concurrent.TimeoutException => labelSum(next) }
+      val cur = awaitObserved(obs, 10.seconds).get("s") match {
+        case Some(d: java.math.BigDecimal) => d
+        case Some(null) => java.math.BigDecimal.ZERO
+        case None => labelSum(next)
+        case Some(other) => new java.math.BigDecimal(other.toString)
       }
       freeCheckpoint(labels)
       labels = next
@@ -458,6 +453,17 @@ object Dedup {
     freeCheckpoint(und)
     labels
   }
+
+  /** The metrics `obs` reports, or empty if they have not arrived within
+    * `timeout`. Waits on the observation's own future on the calling
+    * thread, so no thread stays parked if they never arrive. */
+  private[graft] def awaitObserved(obs: org.apache.spark.sql.Observation,
+                                       timeout: FiniteDuration): Map[String, Any] =
+    try {
+      val row = Await.result(obs.future, timeout)
+      if (row == null || row.schema == null) Map.empty
+      else row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+    } catch { case _: java.util.concurrent.TimeoutException => Map.empty }
 
   /** Free the pinned `localCheckpoint` blocks behind a frame returned by
     * [[connectedComponents]]. Safe to call once the frame (and anything

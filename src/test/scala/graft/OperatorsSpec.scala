@@ -249,6 +249,18 @@ class OperatorsSpec extends AnyFunSuite {
     assert(mz < mr / 3, s"z-ordered scan materialized $mz rows vs unordered $mr — no skipping")
   }
 
+  test("connected components: a never-arriving observation leaves no thread waiting on it") {
+    import scala.concurrent.duration._
+    import scala.jdk.CollectionConverters._
+    def waiters = Thread.getAllStackTraces.asScala.count { case (t, st) =>
+      t.isAlive && st.exists(_.getClassName == "org.apache.spark.sql.Observation")
+    }
+    val before = waiters
+    val obs = org.apache.spark.sql.Observation("never_fires")
+    assert(Dedup.awaitObserved(obs, 200.millis).isEmpty)
+    assert(waiters == before, "a thread is still parked on the observation")
+  }
+
   test("connected components: transitive chains, disjoint clusters, diameter-bounded") {
     import spark.implicits._
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.size

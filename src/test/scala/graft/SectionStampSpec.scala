@@ -206,6 +206,26 @@ class SectionStampSpec extends AnyFunSuite with Retries {
     assert(((JsonMethods.parse(h3) \ "errors")).asInstanceOf[JObject].obj.isEmpty)
   }
 
+  test("headline escapes control characters in error text and keeps to cap") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val nasty = "line one\nsaid \"no\" \u0001 tab\t end"
+    val h = Bench.headline(1.0, "/tmp/x", 1, 1, false, Nil, Nil, Nil, "/tmp/o",
+      errors = Seq("q_nasty" -> nasty))
+    val em = (JsonMethods.parse(h) \ "errors").asInstanceOf[JObject].obj.toMap
+    assert(em("q_nasty") == JString(nasty))
+    // the error map is filled up to its byte budget at some cap in this
+    // sweep; the whole line, queries_top's braces and the closing brace
+    // included, must still fit
+    val errs = (1 to 60).map(i => s"q_err_${"e" * (i % 17)}" -> s"m\n${"x" * (i % 13)}\u0001")
+    (300 to 900).foreach { cap =>
+      val hc = Bench.headline(133.2, "testdata/sf0.1", 156, 60, false,
+        Nil, Nil, Nil, "/tmp/BENCH_local.json", cap = cap, errors = errs)
+      JsonMethods.parse(hc)
+      assert(hc.length <= cap, s"headline ${hc.length} chars over cap $cap")
+    }
+  }
+
   // ---- official box gate (VERDICT r17 #5) -------------------------------
 
   test("box gate: the r17 failure shape (uniformly slow, clean stamps) refuses") {
