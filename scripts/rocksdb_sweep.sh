@@ -1,8 +1,8 @@
 #!/bin/bash
 # Per-round RocksDB provider leg for the streaming catalog (VERDICT r16
 # #5): the driver's oracle gate runs the streaming entries on the default
-# (HDFS-backed) state-store provider, so only the `_tws` rows exercise
-# RocksDB each round — while the measured 100TB scale posture (the
+# (HDFS-backed) state-store provider, so no catalog row exercises
+# RocksDB there — while the measured 100TB scale posture (the
 # provider crossover in BENCH_spill_r15.json) says a real deployment runs
 # RocksDB. This sweep re-runs every catalog entry that starts a real
 # streaming query with the RocksDB provider forced globally
@@ -20,7 +20,7 @@ cd /root/repo
 # completion (writeStream / StreamVerify / streamingDedupEntry); batch
 # entries don't consult the state-store provider and are covered by the
 # main gate
-ENTRIES="q_dedup_embedding_streaming,q_dedup_minhash_streaming,q_dedup_minhash_streaming_tws,q_heavy_hitters_streaming,q_join_stream_static,q_join_stream_stream,q_join_stream_stream_full,q_join_stream_stream_left,q_late_drop,q_sessionize_streaming,q_window_streaming,q_window_streaming_mk,q_window_streaming_ml,q_window_streaming_tws"
+ENTRIES="q_dedup_embedding_streaming,q_dedup_minhash_streaming,q_heavy_hitters_streaming,q_join_stream_static,q_join_stream_stream,q_join_stream_stream_full,q_join_stream_stream_left,q_late_drop,q_sessionize_streaming,q_window_streaming,q_window_streaming_mk,q_window_streaming_ml"
 
 ODIR="$(mktemp -d /tmp/graft_rocksdb_XXXX)"
 SPARK_GRAFT_STATE_PROVIDER=rocksdb \

@@ -28,8 +28,8 @@ b = json.load(open(sf10b))
 s = json.load(open(sf10s))
 
 BATCH = ["q_fuzzy_join", "q_dedup_minhash", "q_dedup_ngram", "q_dedup_cluster"]
-STREAM = ["q_dedup_minhash_streaming", "q_dedup_minhash_streaming_tws",
-          "q_window_streaming_mk", "q_join_stream_stream"]
+STREAM = ["q_dedup_minhash_streaming", "q_window_streaming_mk",
+          "q_join_stream_stream"]
 
 
 def leg(d, keys):

@@ -19,7 +19,7 @@ b, bw = json.load(open(sf1c)), json.load(open(sf1w))
 
 HEAVY = ["q_fuzzy_join", "q_dedup_minhash", "q_dedup_ngram", "q_dedup_cluster",
          "q_dedup_paragraph", "q_dedup_minhash_streaming",
-         "q_dedup_minhash_streaming_tws", "q_window_streaming_mk",
+         "q_window_streaming_mk",
          "q_join_stream_stream", "q_sessionize_streaming", "q_ts_profile_sim",
          "q_ann_ivf", "q_ann_pq"]
 TPCH = ["q_tpch_q2", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9", "q_tpch_q11",

@@ -1354,12 +1354,10 @@ object Bench {
       val priorErr = if (probe) Some(errors.get(name)) else None
       // counters reflect ONE run even under _REPEAT (cardinalities are
       // deterministic, so last run == first run for the counts)
-      // BOTH streaming minhash entries (FMGWS and TWS) mutate the one
-      // JVM-global profile — reset before and snapshot right AFTER
-      // each, under its own counter key, or the post-catalog snapshot
-      // silently sums the engines (r13 review finding)
-      val profiled = name == "q_dedup_minhash_streaming" ||
-        name == "q_dedup_minhash_streaming_tws"
+      // the streaming minhash entry mutates a JVM-global profile — reset
+      // before and snapshot right AFTER it, so the post-catalog snapshot
+      // holds that one entry's counters
+      val profiled = name == "q_dedup_minhash_streaming"
       if (profiled) graft.streaming.StreamingDedup.Profile.reset()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
@@ -1368,9 +1366,7 @@ object Bench {
           false
         }
       if (ok && profiled)
-        BenchCounters.put(
-          if (name.endsWith("_tws")) "smh_tws" else "smh",
-          graft.streaming.StreamingDedup.Profile.snapshot)
+        BenchCounters.put("smh", graft.streaming.StreamingDedup.Profile.snapshot)
       if (!ok) priorErr.foreach {
         case Some(m) => errors(name) = m
         case None    => errors.remove(name); ()

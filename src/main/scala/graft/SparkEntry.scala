@@ -1888,45 +1888,6 @@ object SparkEntry {
                         ORDER BY f0.value DESC LIMIT 3) f) AS top_1h
           FROM $eventsMsDuck e ORDER BY e.event_id"""))
 
-    // The same bounded streaming run through the transformWithState engine
-    // (granular per-bucket state, RocksDB column families) — driver-checks
-    // the TWS path against the identical batch OVER oracle.
-    m += "q_window_streaming_tws" -> Q(
-      (s, dir) => {
-        GraftSession.prepare(s, dir)
-        import org.apache.spark.sql.functions.col
-        import graft.streaming.StreamVerify
-        import graft.streaming.SlidingWindows.{AggSpec, RangeMs}
-        val ev = s.sql(
-          """SELECT ts DIV 1000000 AS ts_ms, CAST(user_id AS STRING) AS key,
-                    CAST(CAST(round(value * 100) AS BIGINT) AS DOUBLE) AS value
-             FROM events""")
-        // bucket granularity sized to the data density (events average
-        // ~2/key/day): day buckets keep the bucket count ~rows/2 instead
-        // of one bucket per row, which is what bounds the per-bucket
-        // state-store op count; frames (1 h) smaller than a bucket are
-        // evaluated from raw rows at the edges, which these sparse frames
-        // make trivially cheap
-        StreamVerify.runBounded(s, ev, "key", "ts_ms", "value",
-            Seq(AggSpec("sum_1h_c", "sum", RangeMs(3600000)),
-                AggSpec("cnt_1h", "count", RangeMs(3600000))),
-            latenessMs = 0, tileGranularityMs = 86400000L,
-            statePartitions = 4, useTws = true)
-          .select(col("ts_ms"), col("key"), (col("value") / 100).as("value"),
-            (col("sum_1h_c") / 100).as("sum_1h"), col("cnt_1h").cast("long").as("cnt_1h"))
-          .orderBy("ts_ms", "key", "value")
-      },
-      Some("""
-        SELECT ts_ms, CAST(user_id AS VARCHAR) AS key,
-               CAST(value_c AS DOUBLE) / 100 AS value,
-               CAST(sum(value_c) OVER w AS DOUBLE) / 100 AS sum_1h,
-               count(*) OVER w AS cnt_1h
-        FROM (SELECT epoch_ms(ts) AS ts_ms, user_id,
-                     CAST(round(value * 100) AS BIGINT) AS value_c FROM events)
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms
-                     RANGE BETWEEN 3600000 PRECEDING AND CURRENT ROW)
-        ORDER BY ts_ms, key, value"""))
-
     // The FULL ML aggregate family over STREAMING windows (reference
     // registry aggregates/mod.rs:184-199): *_where, *_cate[_where],
     // top_n_{key,value}_*_cate_where and top_n_{key,value}_ratio_cate
@@ -3192,8 +3153,7 @@ object SparkEntry {
         // a throw during stream build/start/stop used to leak the 8-part
         // conf (and the provider override) into every later entry. All
         // THREE state-store confs restore, not just the provider (r13
-        // nit): the env knob sets them here, and the TWS engine sets them
-        // inside minhashStreamingPairsTws.
+        // nit): the env knob sets them here.
         GraftSession.withShuffleParts(s,
           sys.env.getOrElse("SPARK_GRAFT_SDD_PARTS", "8")) {
         graft.streaming.StateStoreConf.withSaved(s) {
@@ -3235,16 +3195,6 @@ object SparkEntry {
 
     m += "q_dedup_minhash_streaming" -> streamingDedupEntry(
       st => graft.streaming.StreamingDedup.minhashStreamingPairs(
-        st, "doc_id", "text"),
-      "documents", "doc_id",
-      DedupOracles.minhash())
-
-    // the transformWithState append-only engine as its own driver row:
-    // same math, same batch oracle — so the engine parity the spec pins
-    // (StreamingDedupSpec) is ALSO hash-checked by DuckDB every round,
-    // with RocksDB + changelog checkpointing exercised on the gate path
-    m += "q_dedup_minhash_streaming_tws" -> streamingDedupEntry(
-      st => graft.streaming.StreamingDedup.minhashStreamingPairsTws(
         st, "doc_id", "text"),
       "documents", "doc_id",
       DedupOracles.minhash())

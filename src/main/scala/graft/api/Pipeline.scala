@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 import graft.functions.GraftFunctions
 import graft.serving.{FeatureLookup, FeatureStore, LiveBuffer, RequestServer, ServingBuffer, ShardedFeatureStore, ShardedServingBuffer}
 import graft.sources.{Datagen, Kafka}
-import graft.streaming.{LocalCheckpointFileManager, SlidingWindows}
+import graft.streaming.{LocalCheckpointFileManager, SlidingWindows, StateStoreConf}
 import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
 
 /** Pipeline-spec JSON front-end — the production entry point of the
@@ -28,9 +28,9 @@ import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
   * ```json
   * { "execution_mode": "Batch" | "Streaming" | "Request",
   *   "state_store_provider": "rocksdb" | "hdfs",  // optional (r14): the
-  *                                                // measured policy knob —
-  *                                                // hdfs wins small state,
-  *                                                // rocksdb at volume
+  *                                                // measured policy knob;
+  *                                                // window pipelines default
+  *                                                // to rocksdb
   *   "trigger_ms": 1000,              // optional: explicit trigger cadence
   *   "freshness_target_ms": 2400,     // optional (r15): target p50
   *                                    // event→emit freshness; derives the
@@ -109,6 +109,10 @@ object Pipeline {
   def runJson(spark: SparkSession, json: String,
               tables: Map[String, DataFrame] = Map.empty): Handle = {
     val spec = mapper.readTree(json)
+    if (spec.has("engine"))
+      sys.error("the \"engine\" field is gone: windows have one engine now " +
+        "(flatMapGroupsWithState); drop the field, and pick the state store " +
+        "with \"state_store_provider\"")
     val mode = text(spec, "execution_mode", "Batch")
     GraftFunctions.register(spark)
 
@@ -131,13 +135,17 @@ object Pipeline {
     // state-store provider knob (r14: the measured policy is a spec field,
     // not just an env var — HDFS-backed wins at small state, RocksDB wins
     // once the store outgrows cheap in-heap maps; BENCH_steady_r13.json).
-    // Note the TWS engine requires RocksDB regardless and sets it itself.
-    opt(spec, "state_store_provider").map(_.asText().toLowerCase).foreach {
-      case "rocksdb" => graft.streaming.StateStoreConf.setRocksDb(spark)
-      case "hdfs" => spark.conf.set(graft.streaming.StateStoreConf.ProviderKey,
-        graft.streaming.StateStoreConf.HdfsProvider)
+    // A spec value is obeyed as given; like the checkpoint manager above it
+    // is a session-level effect (see StateStoreConf).
+    val providerGiven = opt(spec, "state_store_provider").map(_.asText().toLowerCase).map {
+      case "rocksdb" => StateStoreConf.setRocksDb(spark)
+      case "hdfs" => spark.conf.set(StateStoreConf.ProviderKey, StateStoreConf.HdfsProvider)
       case other => sys.error(s"state_store_provider must be rocksdb|hdfs, got $other")
-    }
+    }.nonEmpty
+    /** Window pipelines with no provider in the spec run on RocksDB: on
+      * the HDFS-backed store the request-serving tail under concurrent
+      * writes measured about a fifth higher (perfbench `serve_live`). */
+    def windowStateStore(): Unit = if (!providerGiven) StateStoreConf.setRocksDb(spark)
     val overrideNodes: Seq[JsonNode] = opt(spec, "operator_overrides").toSeq.flatMap { oo =>
       opt(oo, "defaults").toSeq ++
         opt(oo, "per_operator").toSeq.flatMap(_.properties().asScala.map(_.getValue))
@@ -180,10 +188,6 @@ object Pipeline {
     val oooMs = opt(spec, "event_time")
       .flatMap(et => opt(et, "watermark"))
       .flatMap(w => opt(w, "out_of_orderness_ms")).map(_.asLong(0L)).getOrElse(0L)
-    /** Streaming window engine: transformWithState (granular per-bucket
-      * RocksDB state) by default, flatMapGroupsWithState via
-      * `"engine": "fmgws"`. */
-    val engine = text(spec, "engine", "tws").toLowerCase
 
     // ---- sources --------------------------------------------------------
     val sourceNodes: Map[String, JsonNode] =
@@ -246,15 +250,17 @@ object Pipeline {
             val gran = tilingGrans.headOption.orElse(opt(spec, "window")
               .flatMap(w => opt(w, "tile_granularity_ms")).map(_.asLong()))
               .getOrElse(60000L)
+            windowStateStore()
             // the FULL hierarchy reaches the engine: finest granularity
-            // sizes the state buckets, the coarse tail covers long-frame
+            // sizes the finest tiles, the coarse tail covers long-frame
             // interiors (the reference's tiles.rs:104-112 default ladder)
-            c.runWith(windowSrcs(c), latenessMs, gran, engine = engine,
+            c.runWith(windowSrcs(c), latenessMs, gran,
               coarseTilesMs = tilingGrans.drop(1))
           case _ => spark.sql(sqlText)
         }
         runStreamSink(spec, df, latenessMs)
       case "Request" =>
+        windowStateStore()
         // windows come either from SQL (compiled — the reference README's
         // request-mode pipelines declare a `query`) or an explicit block
         opt(spec, "sql").map(_.asText()) match {
@@ -273,7 +279,7 @@ object Pipeline {
             // from the raw (joined + derived) rows the window query sees
             val plan = c.enginePlan(windowSrcs(c))
             startRequestServing(spec,
-              c.runWith(windowSrcs(c), latenessMs, gran, engine = engine,
+              c.runWith(windowSrcs(c), latenessMs, gran,
                 coarseTilesMs = tilingGrans.drop(1), prebuiltPlan = Some(plan)),
               c.keyCol, c.tsCol,
               liveFeed = Some(LiveFeed(plan.keyed, plan.engineKey, c.tsCol,
@@ -283,7 +289,7 @@ object Pipeline {
               .getOrElse(sys.error("Request pipeline needs sql or a window block"))
             val src = sourceFrames.values.headOption
               .getOrElse(sys.error("Request pipeline needs a source"))
-            runRequestMode(spec, win, src, latenessMs, engine, tilingGrans)
+            runRequestMode(spec, win, src, latenessMs, tilingGrans)
         }
       case other => sys.error(s"unknown execution_mode $other")
     }
@@ -440,7 +446,7 @@ object Pipeline {
     * expression has no spec field) are rejected at parse time with a
     * pointer to SQL mode, instead of failing deep in the engine. */
   private def runRequestMode(spec: JsonNode, win: JsonNode, src: DataFrame,
-                             latenessMs: Long, engine: String,
+                             latenessMs: Long,
                              tilingGrans: Seq[Long] = Nil): Handle = {
     val keyCol = text(win, "key_column", "key")
     val tsCol = text(win, "ts_column", "ts_ms")
@@ -464,17 +470,8 @@ object Pipeline {
       AggSpec(name, kind, frame, opt(a, "n").map(_.asInt()).getOrElse(0),
         cIdx = 0)
     }
-    val out =
-      if (engine == "fmgws")
-        SlidingWindows.streaming(src, keyCol, tsCol, valueCol, specs,
-          latenessMs, gran, cateCol = cateCol, coarseTilesMs = coarse)
-      else
-        // session-level side effect: the TWS builder sets the RocksDB
-        // state-store confs (required at query start) and the query this
-        // spec launches outlives the call, so they are NOT restored here —
-        // see graft.streaming.StateStoreConf
-        graft.streaming.SlidingWindowsTws.streaming(src, keyCol, tsCol, valueCol,
-          specs, latenessMs, gran, cateCol = cateCol, coarseTilesMs = coarse)
+    val out = SlidingWindows.streaming(src, keyCol, tsCol, valueCol, specs,
+      latenessMs, gran, cateCol = cateCol, coarseTilesMs = coarse)
     // live request evaluation reads raw rows keyed/slotted exactly as the
     // engine wrapper slots them (value -> slot 0, cate -> string slot 0)
     val raw = src.select(Seq(col(tsCol).cast("long").as("ts_ms"),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.{broadcast, col, concat, expr, length, lit
 import org.apache.spark.sql.types.{CalendarIntervalType, DataType, DayTimeIntervalType, StringType}
 import org.apache.spark.unsafe.types.CalendarInterval
 
-import graft.streaming.{SlidingWindows, SlidingWindowsTws}
+import graft.streaming.SlidingWindows
 import graft.streaming.SlidingWindows.{AggSpec, Frame, RangeMs, RowsN}
 
 /** SQL OVER-window compiler for the streaming engine — the reference's
@@ -104,26 +104,19 @@ object WindowSql {
     def run(src: DataFrame, latenessMs: Long = 0,
             tileGranularityMs: Long = 60000L,
             useBatchSweep: Boolean = false,
-            engine: String = "tws",
             coarseTilesMs: Seq[Long] = Nil): DataFrame =
       runWith(Map(relations.head.table -> src), latenessMs, tileGranularityMs,
-        useBatchSweep, engine, coarseTilesMs)
+        useBatchSweep, coarseTilesMs)
 
     /** Run the compiled windows through the engine. `srcs` maps each FROM
       * relation to its frame; in streaming mode the FIRST relation is the
       * stream and the others must be static frames (stream-static join —
       * the reference joins its stream against table-backed sides the same
       * way, logical_graph.rs:362-494).
-      *
-      * @param engine streaming engine: "tws" (transformWithState, granular
-      *               per-bucket RocksDB state — the default; writes only
-      *               touched buckets per trigger) or "fmgws"
-      *               (flatMapGroupsWithState fallback).
       */
     def runWith(srcs: Map[String, DataFrame], latenessMs: Long = 0,
                 tileGranularityMs: Long = 60000L,
                 useBatchSweep: Boolean = false,
-                engine: String = "tws",
                 coarseTilesMs: Seq[Long] = Nil,
                 prebuiltPlan: Option[EnginePlan] = None): DataFrame = {
       // prebuiltPlan: a caller that already materialized enginePlan (the
@@ -136,14 +129,8 @@ object WindowSql {
         if (useBatchSweep)
           SlidingWindows.batchComputeMulti(keyed, engineKey, tsCol, numCols, strCols,
             specs, tileGranularityMs, coarseTilesMs)
-        else if (engine == "fmgws")
-          SlidingWindows.streamingMulti(keyed, engineKey, tsCol, numCols, strCols,
-            specs, latenessMs, tileGranularityMs, coarseTilesMs)
         else
-          // session-level side effect: sets the RocksDB state-store confs
-          // (required at query start); bounded runners restore via
-          // StateStoreConf.withSaved (StreamVerify does)
-          SlidingWindowsTws.streamingMulti(keyed, engineKey, tsCol, numCols, strCols,
+          SlidingWindows.streamingMulti(keyed, engineKey, tsCol, numCols, strCols,
             specs, latenessMs, tileGranularityMs, coarseTilesMs)
       // engine emits (ts_ms, key, <numCols>, <strCols>, <specs>) with the
       // original column names — ts/key need renaming back; pass-through

@@ -355,65 +355,6 @@ object SlidingWindows {
         i += 1
       }
     }
-
-    /** Fold another tile into this one — coarse tiles of a granularity
-      * hierarchy are exact merges of their covered finer tiles (the
-      * reference maintains the same hierarchy in state, tiles.rs:104-112).
-      */
-    def merge(o: Tile): Unit = if (o.count > 0) {
-      val first = count == 0
-      var i = 0
-      while (i < sum.length) {
-        sum(i) += o.sum(i); sum2(i) += o.sum2(i)
-        if (first || o.min(i) < min(i)) min(i) = o.min(i)
-        if (first || o.max(i) > max(i)) max(i) = o.max(i)
-        if (cmNum(i) != null) o.cmNum(i).foreach { case (v, n) =>
-          cmNum(i).update(v, cmNum(i).getOrElse(v, 0L) + n)
-        }
-        if (topNum(i) != null) topNum(i).addAll(o.topNum(i))
-        i += 1
-      }
-      i = 0
-      while (i < cmStr.length) {
-        if (cmStr(i) != null) o.cmStr(i).foreach { case (s, n) =>
-          cmStr(i).update(s, cmStr(i).getOrElse(s, 0L) + n)
-        }
-        if (topStr(i) != null) topStr(i).addAll(o.topStr(i))
-        i += 1
-      }
-      i = 0
-      while (i < cate.length) {
-        o.cate(i).foreach { case (c, oa) =>
-          val a = cate(i).getOrElseUpdate(c, Array(0.0, 0.0, Double.NaN, Double.NaN))
-          val was = a(0)
-          a(0) += oa(0); a(1) += oa(1)
-          if (was == 0 || oa(2) < a(2)) a(2) = oa(2)
-          if (was == 0 || oa(3) > a(3)) a(3) = oa(3)
-        }
-        i += 1
-      }
-      i = 0
-      while (i < masked.length) {
-        val oa = o.masked(i)
-        if (oa(0) > 0) {
-          val a = masked(i)
-          val was = a(0)
-          a(0) += oa(0); a(1) += oa(1); a(2) += oa(2)
-          if (was == 0 || oa(3) < a(3)) a(3) = oa(3)
-          if (was == 0 || oa(4) > a(4)) a(4) = oa(4)
-        }
-        i += 1
-      }
-      i = 0
-      while (i < ratio.length) {
-        o.ratio(i).foreach { case (c, oa) =>
-          val a = ratio(i).getOrElseUpdate(c, Array(0L, 0L))
-          a(0) += oa(0); a(1) += oa(1)
-        }
-        i += 1
-      }
-      count += o.count
-    }
   }
 
   /** Per-key state: event buffer (sorted by ts,seq), tile index, positions. */
@@ -805,7 +746,7 @@ object SlidingWindows {
 
   /** Output row for buffer row `i`: (ts, key, numeric slots, string slots,
     * one value per spec) as ONE flat values array — the shared emit step
-    * of both streaming engines and the batch sweep. `specIdx` is
+    * of the streaming engine and the batch sweep. `specIdx` is
     * [[specIdxOf]] per spec, hoisted out of the per-row loop. */
   private[streaming] def emitRow(st: KeyState, i: Int, key: String, specs: Array[AggSpec],
                                  specIdx: Array[(Int, Int, Int)], grans: Seq[Long],

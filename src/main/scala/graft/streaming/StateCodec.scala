@@ -5,8 +5,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import graft.streaming.SlidingWindows.{KeyState, Needs, Tile}
 
 /** Hand-rolled binary codec for engine state — the state-store hot path.
-  * Every touched bucket (TWS) or key (FMGWS) re-serializes its state
-  * value once per trigger, so codec speed IS the write amplification
+  * Every touched key re-serializes its state value once per trigger, so
+  * codec speed IS the write amplification
   * floor; Kryo's class-graph walk costs several times a flat
   * length-prefixed layout (same reasoning as
   * [[graft.functions.BufCodec]] for the aggregate shuffle buffers).
@@ -55,32 +55,7 @@ object StateCodec {
     (ts, seq, nums, strs)
   }
 
-  // ---- TWS bucket: row count + rows; tile rebuilt ----------------------
-
-  def encodeBucket(bk: SlidingWindowsTws.Bucket): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(64 + bk.rows.length * 32)
-    val o = new DataOutputStream(bos)
-    o.writeInt(bk.rows.length)
-    bk.rows.foreach(writeRow(o, _))
-    o.flush(); bos.toByteArray
-  }
-
-  def decodeBucket(bytes: Array[Byte], needs: Needs): SlidingWindowsTws.Bucket = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val bk = new SlidingWindowsTws.Bucket
-    bk.tile = new Tile(needs)
-    var i = 0
-    while (i < n) {
-      val r = readRow(in, needs.nNum, needs.nStr)
-      bk.rows += r
-      bk.tile.add(r._3, r._4)
-      i += 1
-    }
-    bk
-  }
-
-  // ---- FMGWS key state: scalars + buffer rows; tiles rebuilt -----------
+  // ---- key state: scalars + buffer rows; tiles rebuilt ----------------
 
   def encodeKeyState(st: KeyState): Array[Byte] = {
     val bos = new ByteArrayOutputStream(64 + st.buffer.length * 32)

@@ -2,22 +2,20 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-conf hygiene for the three state-store settings the streaming
-  * engines touch. Spark resolves the state-store provider (and the RocksDB
-  * auxiliary knobs) from the SESSION conf at query start, so a plan builder
-  * that needs RocksDB (transformWithState requires column families — the
-  * HDFS-backed default supports exactly one) has no choice but to mutate
-  * session state before the query starts. Left unrestored, that mutation
-  * silently changes the provider of every LATER streaming query in the
-  * session — a spec documented as exercising the HDFS default would really
-  * run on RocksDB (r13 ADVICE, StreamingDedup.scala:198).
+/** Session-conf hygiene for the three state-store settings graft touches.
+  * Spark resolves the state-store provider (and the RocksDB auxiliary
+  * knobs) from the SESSION conf at query start, so choosing a provider
+  * means mutating session state before the query starts. No engine
+  * builder does that; the choosers are `api.Pipeline` (its
+  * `state_store_provider` field, RocksDB by default for window pipelines)
+  * and the env knobs of a few bounded catalog entries.
   *
-  * The contract: plan builders call [[setRocksDb]]; anything that runs a
-  * bounded streaming query to completion (catalog entries, StreamVerify,
-  * specs) wraps the build+run in [[withSaved]], which restores ALL THREE
-  * keys — set or unset — to their entry values. Long-lived product paths
-  * (api.Pipeline specs, WindowSql) cannot restore (the query outlives the
-  * call) and instead document the session-level effect.
+  * The contract: a bounded run that sets a provider wraps the set, the
+  * build and the run in [[withSaved]], which restores ALL THREE keys —
+  * set or unset — to their entry values, so later streaming queries in
+  * the session keep their own provider. Long-lived product paths
+  * (api.Pipeline specs) cannot restore (the query outlives the call) and
+  * instead document the session-level effect.
   */
 object StateStoreConf {
   val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
@@ -42,8 +40,8 @@ object StateStoreConf {
     }
 
   /** Runs `f`, then restores the three state-store confs to their values on
-    * entry — whatever `f` (or a TWS plan builder inside it) set. `f` must
-    * both START and DRAIN/STOP any streaming query that depends on them:
+    * entry — whatever `f` set. `f` must both START and DRAIN/STOP any
+    * streaming query that depends on them:
     * the confs are consulted at query start, so restoring while a query
     * `f` launched is still running would be a different bug. */
   def withSaved[T](spark: SparkSession)(f: => T): T = {

@@ -31,12 +31,11 @@ object StreamVerify {
                  tsMsCol: String, valueCol: String, specs: Seq[AggSpec],
                  latenessMs: Long = 0, tileGranularityMs: Long = 60000L,
                  checkpointDir: String = null,
-                 statePartitions: Int = 8,
-                 useTws: Boolean = false): DataFrame =
+                 statePartitions: Int = 8): DataFrame =
     runBoundedMulti(spark, input.select(
         col(tsMsCol), col(keyCol), col(valueCol).cast("double").as("value")),
       keyCol, tsMsCol, Seq("value"), Nil, specs, latenessMs, tileGranularityMs,
-      checkpointDir, statePartitions, useTws)
+      checkpointDir, statePartitions)
 
   /** Bounded run of a compiled SQL window query ([[graft.api.WindowSql]])
     * through the streaming engine — the path that exercises multi-column
@@ -47,8 +46,7 @@ object StreamVerify {
   def runBoundedSql(spark: SparkSession, compiled: graft.api.WindowSql.Compiled,
                     input: DataFrame,
                     latenessMs: Long = 0, tileGranularityMs: Long = 60000L,
-                    statePartitions: Int = 8,
-                    engine: String = "tws"): DataFrame = {
+                    statePartitions: Int = 8): DataFrame = {
     val root = graft.GraftSession.tempDir("graft_stream_sql_")
     val inDir = s"$root/in"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
     input.write.parquet(inDir)
@@ -68,10 +66,10 @@ object StreamVerify {
 
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try StateStoreConf.withSaved(spark) {
+    try {
       val streamIn = spark.readStream.schema(input.schema).parquet(inDir)
       val out = compiled.runWith(Map(compiled.table -> streamIn),
-        latenessMs, tileGranularityMs, useBatchSweep = false, engine)
+        latenessMs, tileGranularityMs)
       val q = out.writeStream.outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .trigger(Trigger.ProcessingTime(0)).start()
@@ -96,8 +94,7 @@ object StreamVerify {
                       specs: Seq[AggSpec],
                       latenessMs: Long = 0, tileGranularityMs: Long = 60000L,
                       checkpointDir: String = null,
-                      statePartitions: Int = 8,
-                      useTws: Boolean = false): DataFrame = {
+                      statePartitions: Int = 8): DataFrame = {
     val root = graft.GraftSession.tempDir("graft_stream_")
     val inDir = s"$root/in"; val outDir = s"$root/out"
     val ckpt = if (checkpointDir == null) s"$root/ckpt" else checkpointDir
@@ -116,15 +113,10 @@ object StreamVerify {
     // to the workload instead of inheriting the batch shuffle setting
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // the TWS builder sets the RocksDB provider confs on the session;
-    // restore them once the bounded query has drained and stopped
-    try StateStoreConf.withSaved(spark) {
+    try {
       val streamIn = spark.readStream.schema(staged.schema).parquet(inDir)
-      val out =
-        if (useTws) SlidingWindowsTws.streamingMulti(streamIn, "key", "ts_ms",
-          valueCols, strCols, specs, latenessMs, tileGranularityMs)
-        else SlidingWindows.streamingMulti(streamIn, "key", "ts_ms",
-          valueCols, strCols, specs, latenessMs, tileGranularityMs)
+      val out = SlidingWindows.streamingMulti(streamIn, "key", "ts_ms",
+        valueCols, strCols, specs, latenessMs, tileGranularityMs)
       val q = out.writeStream.outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .trigger(Trigger.ProcessingTime(0)).start()

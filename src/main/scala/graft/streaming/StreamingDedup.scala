@@ -149,8 +149,8 @@ object StreamingDedup {
       .toDF("__lid", "__rid")
   }
 
-  /** The banded shuffle frame shared by both engines: `(__bucket, __id,
-    * __sigb)` rows, everything heavier than the id in COMPACT BINARY.
+  /** The banded shuffle frame: `(__bucket, __id, __sigb)` rows,
+    * everything heavier than the id in COMPACT BINARY.
     *
     *  - `__sigb` is the signature packed 4 bytes per min ([[graft.functions.ArrayMath.packInts]]
     *    — mins are `(a*x+b) % P31 < 2^31`, so the narrow pack is
@@ -169,7 +169,7 @@ object StreamingDedup {
     *    is INJECTIVE both ways, so bucket membership — and therefore
     *    candidate comparisons, the online cap, and the emitted pair set —
     *    is bit-identical to the string form (StreamingDedupSpec pins the
-    *    batch parity; the bench oracle hash-checks both engines).
+    *    batch parity; the catalog oracle hash-checks the stream).
     */
   private def bandedRows(df: DataFrame, idCol: String, textCol: String,
                          k: Int, numHashes: Int, bands: Int, rpb: Int): DataFrame =
@@ -194,112 +194,6 @@ object StreamingDedup {
       i += 1
     }
     eq.toDouble / numHashes
-  }
-
-  /** [[minhashStreamingPairs]] on the `transformWithState` engine with a
-    * CONSOLIDATED bucket blob (r19, VERDICT r18 #1). The r12–r18 layout
-    * kept each member as its own `ListState` element (append-only, O(1)
-    * write — the asymmetry the reference's bucket index exploits,
-    * src/storage/index/bucket_index.rs), but the 100× scale record
-    * measured the real cost driver elsewhere: with ~7.64M touched buckets
-    * averaging ~1 member each, the per-KEY overhead of the public
-    * `ListState` surface (a RocksDB range iterator per `get()` plus the
-    * per-element codec round-trip) charged ~85 µs to every touched
-    * bucket and made this the repo's only super-linear slope (154.8 vs
-    * the FMGWS twin's 74.6 on counter-identical work —
-    * BENCH_sf10_r18.json `tws_slope_attribution`; the provider was
-    * exonerated by a control run). This layout stores the bucket as ONE
-    * `ValueState[Array[Byte]]` blob in the FMGWS engine's exact pack
-    * format: a touched bucket costs one point `get()` + one `put()` per
-    * trigger regardless of member count — the state-shape twin of
-    * [[minhashStreamingPairs]], so the engines differ only in API
-    * machinery and the slope gap isolates `transformWithState` itself.
-    * Measured r19 at 100× (BENCH_sf10_tws_r19.json, counter-identical
-    * work): TWS/FMGWS wall ratio 1.99 (ListState layout, r18) → 1.62
-    * (this layout); the residual per-touched-key API floor is pinned by
-    * TWSPROBE_r19.json. Engine policy: FMGWS stays the shipping
-    * default; this row exists for API parity.
-    * Whole-blob rewrite is O(bucket²) bytes over a bucket's lifetime,
-    * the same bound FMGWS carries — capped by `maxBucket`.
-    *
-    * Math, arrival order, cap semantics, overflow marker, and emitted
-    * pair set are IDENTICAL to [[minhashStreamingPairs]]
-    * (StreamingDedupSpec pins engine equality), so the batch oracle
-    * verifies this engine too. Requires the RocksDB provider (column
-    * families) — set by this method, like [[SlidingWindowsTws]].
-    */
-  def minhashStreamingPairsTws(df: DataFrame, idCol: String, textCol: String,
-                               k: Int = 5, numHashes: Int = 128, bands: Int = 16,
-                               threshold: Double = 0.8,
-                               maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    require(bands <= 255, s"bands = $bands: the band key is one byte")
-    val rpb = numHashes / bands
-    // Session-level side effect, needed at query start (see
-    // [[StateStoreConf]]): bounded callers wrap build+run in
-    // StateStoreConf.withSaved so later queries see the session default.
-    StateStoreConf.setRocksDb(df.sparkSession)
-    val banded = bandedRows(df, idCol, textCol, k, numHashes, bands, rpb)
-
-    import banded.sparkSession.implicits._
-    banded
-      .as[(Array[Byte], Long, Array[Byte])]
-      .groupByKey(_._1)
-      .transformWithState(
-        new MinhashBucketProcessor(numHashes, threshold, maxBucket),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-      .toDF("__lid", "__rid")
-  }
-
-  /** Consolidated LSH bucket state: the whole membership as ONE
-    * [[pack]]-format blob — a point read and a point write per touched
-    * bucket per trigger. See [[minhashStreamingPairsTws]]. */
-  private final class MinhashBucketProcessor(numHashes: Int, threshold: Double,
-                                             maxBucket: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Array[Byte], (Array[Byte], Long, Array[Byte]), (Long, Long)] {
-
-    @transient private var members: org.apache.spark.sql.streaming.ValueState[Array[Byte]] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      members = getHandle.getValueState[Array[Byte]]("members",
-        org.apache.spark.sql.Encoders.BINARY,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Array[Byte], rows: Iterator[(Array[Byte], Long, Array[Byte])],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[(Long, Long)] = {
-      Profile.stateCalls.incrementAndGet()
-      // one point read per touched bucket per trigger — the comparisons
-      // need every member anyway
-      var existing = Option(members.get()).map(unpack(_, numHashes))
-        .getOrElse(Vector.empty)
-      var grew = false
-      val out = Vector.newBuilder[(Long, Long)]
-      rows.toSeq.sortBy(_._2).foreach { case (_, id, sig) =>
-        Profile.arrivals.incrementAndGet()
-        if (existing.exists(_._1 == id)) Profile.dupDeliveries.incrementAndGet()
-        else if (existing.size >= maxBucket) {
-          out += ((OverflowMarker, id))
-          Profile.overflows.incrementAndGet()
-        } else {
-          existing.foreach { case (mid, msig) =>
-            Profile.comparisons.incrementAndGet()
-            if (sigAgreement(msig, sig, numHashes) >= threshold) {
-              out += ((mid, id)); Profile.pairsEmitted.incrementAndGet()
-            }
-          }
-          existing = existing :+ (id -> sig)
-          grew = true
-        }
-      }
-      // write only when membership actually changed: dup-delivery-only and
-      // overflow-only triggers leave the blob (and the changelog) untouched
-      if (grew) members.update(pack(existing, numHashes))
-      out.result().iterator
-    }
   }
 
   /** Streaming embedding near-dup PAIRS — [[Dedup.embeddingLshAccepted]]

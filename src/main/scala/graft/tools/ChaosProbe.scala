@@ -9,6 +9,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
 import graft.{GraftSession, SparkEntry}
+import graft.streaming.StateStoreConf
 
 /** Executor-loss resilience proof: run multi-stage catalog entries on
   * `local-cluster[2,2,1024]` (two real forked executor JVMs), SIGKILL
@@ -39,14 +40,13 @@ object ChaosProbe {
   val entryNames: Seq[String] = Seq(
     "q_dedup_minhash", "q_dedup_ngram", "q_dedup_cluster")
 
-  /** The streaming victim queries for phase 2: the FMGWS sliding-window
-    * engine (HDFS-backed state store) and, r13, its transformWithState
-    * twin (RocksDB changelog state) — the kill lands while each one's
+  /** The streaming victim query for phase 2: the sliding-window engine,
+    * run once on the HDFS-backed state store and once on RocksDB
+    * (changelog checkpointing) — the kill lands while each run's
     * micro-batches are in flight, so BOTH state backends prove the
     * reload-from-checkpoint-on-a-survivor path with byte-identical
     * output. */
   val streamEntry = "q_window_streaming"
-  val streamEntryTws = "q_window_streaming_tws"
 
   private val addOpens: Seq[String] = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -134,13 +134,14 @@ object ChaosProbe {
     report.put("replacement_spawned", (afterPids -- beforePids).nonEmpty)
 
     // ---- streaming phase: SIGKILL an executor while a STREAMING query
-    // (FMGWS state engine, HDFS-backed store, checkpointed) is running.
-    // The dying executor takes its in-memory state-store maps with it;
-    // task retry must reload the last committed state version from the
-    // checkpoint on a surviving/replacement executor — the streaming
-    // recovery path a real cluster exercises on every executor loss.
-    val streamVictims = Seq("stream" -> streamEntry, "stream_tws" -> streamEntryTws)
-    val streamRows = streamVictims.map { case (tag, entry) =>
+    // (sliding-window state engine, checkpointed) is running, once per
+    // state backend. The dying executor takes its in-memory state-store
+    // maps (or its RocksDB instance) with it; task retry must reload the
+    // last committed state version from the checkpoint on a
+    // surviving/replacement executor — the streaming recovery path a real
+    // cluster exercises on every executor loss.
+    val streamVictims = Seq("stream" -> false, "stream_rocksdb" -> true)
+    val streamRows = streamVictims.map { case (tag, rocksDb) =>
       val midPids = execPids(cluster) - driverPid
       val victim2 = midPids.max
       val stagesSeen2 = new AtomicInteger(0)
@@ -161,10 +162,12 @@ object ChaosProbe {
       assassin2.setDaemon(true)
       assassin2.start()
       val rows =
-        try Some(SparkEntry.queries(entry)(cluster, sfDir)
-          .collect().toSeq.map(_.toSeq).sortBy(_.mkString("|")))
-        catch { case e: Throwable =>
-          failures.add(s"cluster/$entry: ${e.getClass.getName}: ${e.getMessage}")
+        try StateStoreConf.withSaved(cluster) {
+          if (rocksDb) StateStoreConf.setRocksDb(cluster)
+          Some(SparkEntry.queries(streamEntry)(cluster, sfDir)
+            .collect().toSeq.map(_.toSeq).sortBy(_.mkString("|")))
+        } catch { case e: Throwable =>
+          failures.add(s"cluster/$tag: ${e.getClass.getName}: ${e.getMessage}")
           None
         }
       assassin2.join(2000)
@@ -175,7 +178,7 @@ object ChaosProbe {
         v2Handle.isPresent && v2Handle.get().isAlive)
       report.put(s"${tag}_stages_at_kill", stagesAtKill2)
       report.put(s"${tag}_stages_total", stagesSeen2.get())
-      (tag, entry, rows)
+      (tag, streamEntry, rows)
     }
 
     // ---- phase 3 (r13): serving WRITE path chaos. The shard-log
@@ -419,7 +422,7 @@ object ChaosProbe {
       .config("spark.sql.shuffle.partitions", "8")
       .getOrCreate()
     local.sparkContext.setLogLevel("WARN")
-    val localRows = (entryNames :+ streamEntry :+ streamEntryTws).flatMap { name =>
+    val localRows = (entryNames :+ streamEntry).flatMap { name =>
       try {
         val rows = SparkEntry.queries(name)(local, sfDir)
           .collect().toSeq.map(_.toSeq)

@@ -38,7 +38,7 @@ import graft.serving.ShardedFeatureStore
   *    family / KMV / quantile sketch / median / CMS): their buffers are
   *    serialized between partial and final aggregation across executors;
   *  - UDAF-over-window forms (q_top_window, q_top_window_tiled);
-  *  - one FMGWS streaming entry, one TWS+RocksDB entry, and the
+  *  - the sliding-window streaming entry and the
   *    streaming MinHash dedup (state codecs encode/decode on executors);
   *  - the as-of join (custom temporal operator, range-partitioned);
   *  - the JDK-codec multimodal decode (mapPartitions task closures
@@ -66,7 +66,6 @@ object ClusterProbe {
     "q_join_asof",
     "q_multimodal_jdk",
     "q_window_streaming",
-    "q_window_streaming_tws",
     "q_dedup_minhash_streaming")
 
   /** FULL-catalog mode (`args(2) == "all"`): every SparkEntry entry runs

@@ -23,7 +23,7 @@ import graft.streaming.SlidingWindows
   *
   * Shapes: stateless projection+filter (append mode), grouped aggregate
   * (complete mode, memory sink), and per-row OVER windows (RANGE/ROWS
-  * frames) compiled into the sliding-window engine (tws or fmgws), fed
+  * frames) compiled into the sliding-window engine, fed
   * out of order within a covering allowed-lateness and closed with the
   * two-round FLUSH_TS protocol. Sources alternate MemoryStream and a
   * streaming parquet directory; sinks alternate memory and parquet.
@@ -133,7 +133,6 @@ object PipelineFuzz {
       (ts, s"k${r.nextInt(nKeys)}", r.nextInt(1000) / 4.0)
     }
     val spanMs = rows.last._1 - base
-    val engine = if (r.nextBoolean()) "tws" else "fmgws"
     val sharded = r.nextInt(3) == 0
     val coalesce = r.nextBoolean()
     val gran = Seq(1000L, 5000L, 60000L)(r.nextInt(3))
@@ -166,7 +165,6 @@ object PipelineFuzz {
       if (sharded) s""", "sharded": {"num_shards": ${2 + r.nextInt(4)}}""" else ""
     val spec = s"""{
       "execution_mode": "Request",
-      "engine": "$engine",
       "event_time": { "window": {"allowed_lateness_ms": ${spanMs + 3600000L}} },
       "window": { "tile_granularity_ms": $gran },
       "sources": [ { "table_name": "$view", "source": { "Parquet": {"path": "$root/in"} } } ],
@@ -201,7 +199,7 @@ object PipelineFuzz {
           val got = fo.get(name).asDouble()
           if (java.lang.Double.compare(got, want) != 0)
             return Some(s"$key@$at $name: http=$got brute=$want " +
-              s"(engine=$engine sharded=$sharded coalesce=$coalesce)")
+              s"(sharded=$sharded coalesce=$coalesce)")
         }
       }
       None
@@ -271,7 +269,6 @@ object PipelineFuzz {
       // ---- knobs -------------------------------------------------------
       val srcKind = if (r.nextBoolean()) "Memory" else "Parquet"
       val sinkMem = r.nextBoolean()
-      val engine = if (r.nextBoolean()) "tws" else "fmgws"
       val lateness = spanMs + 3600000L
       val gran = Seq(1000L, 5000L, 60000L, 600000L)(r.nextInt(4))
       val withCoarse = r.nextInt(3) == 0
@@ -313,7 +310,7 @@ object PipelineFuzz {
             s"$kind(value) OVER (PARTITION BY key ORDER BY ts_ms $frame) AS w_$a"
           }
           (s"SELECT ts_ms, key, ${aggs.mkString(", ")} FROM $view",
-            s"over_$engine", true, "append")
+            "over", true, "append")
       }
 
       // ---- source + sink blocks ----------------------------------------
@@ -341,7 +338,6 @@ object PipelineFuzz {
         else ""
       val spec = s"""{
         "execution_mode": "Streaming",
-        "engine": "$engine",
         "parallelism": $parallelism,
         $provider
         $coarseJson
@@ -431,7 +427,7 @@ object PipelineFuzz {
     val what =
       if (family == "request")
         "random REQUEST-mode pipeline-spec documents through api.Pipeline.runJson " +
-          "(OVER-window SQL x engine x sharded/coalesce serving knobs), live " +
+          "(OVER-window SQL x sharded/coalesce serving knobs), live " +
           "HTTP point-in-time lookups compared exactly against the brute-force " +
           "as-of oracle (family H's compare, driven from the spec loader)"
       else

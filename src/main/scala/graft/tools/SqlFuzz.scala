@@ -8,7 +8,7 @@ import graft.GraftSession
 
 /** Registry-driven fuzz of the batch SQL surface (VERDICT r14 stretch #8).
   *
-  * The 156-entry catalog pins fixed queries; this tool samples the space
+  * The 154-entry catalog pins fixed queries; this tool samples the space
   * BETWEEN them: seeded random projections / filters / joins / aggregates
   * over the driver's test tables, emitted in the dialect-portable ANSI
   * subset both Spark and DuckDB parse identically, executed by Spark into

@@ -45,7 +45,7 @@ import graft.GraftSession
   *
   * Usage:
   *   runMain graft.tools.SteadyStream <sfDir> <outJson> \
-  *     [workload=minhash|minhash_tws|window|join] [triggers=20] \
+  *     [workload=minhash|window|join] [triggers=20] \
   *     [provider=hdfs|rocksdb] [restartAt=0]
   *
   * Output: one JSON object per run with per-trigger records, the
@@ -59,11 +59,7 @@ object SteadyStream {
     val outJson = args(1)
     val workload = if (args.length > 2) args(2) else "minhash"
     val triggers = if (args.length > 3) args(3).toInt else 20
-    // the TWS engine forces RocksDB internally — stamping the CLI arg
-    // would put a wrong provider label in the permanent record
-    val provider =
-      if (workload == "minhash_tws") "rocksdb"
-      else if (args.length > 4) args(4) else "hdfs"
+    val provider = if (args.length > 4) args(4) else "hdfs"
     val restartAt = if (args.length > 5) args(5).toInt else 0
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -186,14 +182,6 @@ object SteadyStream {
           s"$root/in", triggers)
         (n, b, graft.streaming.StreamingDedup
           .minhashStreamingPairs(fileStream(s"$root/in"), "doc_id", "text"),
-          "__rid")
-      case "minhash_tws" =>
-        // append-only ListState engine (forces the RocksDB provider)
-        val docs = GraftSession.table(spark, sfDir, "documents")
-        val (n, b) = splitFiles(docs.select("doc_id", "text").orderBy("doc_id"),
-          s"$root/in", triggers)
-        (n, b, graft.streaming.StreamingDedup
-          .minhashStreamingPairsTws(fileStream(s"$root/in"), "doc_id", "text"),
           "__rid")
       case "window" =>
         import graft.streaming.SlidingWindows.{AggSpec, RangeMs}

@@ -86,11 +86,11 @@ class ChaosClusterSpec extends AnyFunSuite {
         s"$name differs after executor loss: $report")
     }
 
-    // streaming phases: one executor SIGKILLed while the FMGWS entry's
-    // micro-batches were in flight (HDFS-backed state), another during
-    // the TWS entry's (RocksDB changelog state) — both backends must
+    // streaming phases: one executor SIGKILLed while the window entry's
+    // micro-batches were in flight on the HDFS-backed store, another
+    // during its run on RocksDB (changelog state) — both backends must
     // reload state from the checkpoint on a survivor, output unchanged
-    Seq("stream", "stream_tws").foreach { tag =>
+    Seq("stream", "stream_rocksdb").foreach { tag =>
       assert(node.get(s"${tag}_victim_killed").asBoolean(),
         s"$tag-phase victim not killed: $report")
       assert(!node.get(s"${tag}_victim_alive_after").asBoolean(),

@@ -31,15 +31,17 @@ class CheckpointRecoverySpec extends AnyFunSuite {
   }
 
   test("stop + restart from a durable checkpoint is exactly-once and state-correct") {
-    runKillRecovery(tws = false)
+    runKillRecovery(rocksDb = false)
   }
 
-  test("transformWithState engine: stop + restart from a durable checkpoint is exactly-once") {
-    runKillRecovery(tws = true)
+  // the state store window pipelines default to (api.Pipeline)
+  test("RocksDB state store: stop + restart from a durable checkpoint is exactly-once") {
+    runKillRecovery(rocksDb = true)
   }
 
-  private def runKillRecovery(tws: Boolean): Unit =
+  private def runKillRecovery(rocksDb: Boolean): Unit =
     graft.streaming.StateStoreConf.withSaved(spark) {
+    if (rocksDb) graft.streaming.StateStoreConf.setRocksDb(spark)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -54,11 +56,8 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
     val mem = MemoryStream[(Long, String, Double)]
     val src = mem.toDF().toDF("ts_ms", "key", "value")
-    val out =
-      if (tws) graft.streaming.SlidingWindowsTws.streaming(src,
-        "key", "ts_ms", "value", specs, latenessMs = 0, tileGranularityMs = 2000)
-      else SlidingWindows.streaming(src,
-        "key", "ts_ms", "value", specs, latenessMs = 0, tileGranularityMs = 2000)
+    val out = SlidingWindows.streaming(src,
+      "key", "ts_ms", "value", specs, latenessMs = 0, tileGranularityMs = 2000)
 
     def start() = out.writeStream.outputMode("append").format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt)

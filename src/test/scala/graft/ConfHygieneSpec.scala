@@ -26,14 +26,13 @@ class ConfHygieneSpec extends AnyFunSuite {
     s
   }
 
-  /** The conf-mutating streaming entries: both TWS engines (force the
-    * RocksDB provider at plan build), the FMGWS dedup entry (partitions +
-    * env provider knob), and the stream-stream join (sets the provider
-    * explicitly either way). */
+  /** The conf-mutating streaming entries: the dedup entry (partitions +
+    * env provider knob), the stream-stream join (sets the provider
+    * explicitly either way), and the bounded window run (StreamVerify
+    * sizes the state partitions). */
   private val entries = Seq(
     "q_dedup_minhash_streaming",
-    "q_dedup_minhash_streaming_tws",
-    "q_window_streaming_tws",
+    "q_window_streaming",
     "q_join_stream_stream")
 
   test("streaming catalog entries leave the session conf untouched") {

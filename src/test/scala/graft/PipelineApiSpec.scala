@@ -251,6 +251,72 @@ class PipelineApiSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs a windowed Streaming spec (`fields` spliced in) on a fresh
+    * session through two micro-batches into a Parquet sink; returns the
+    * names of the state-store files under its checkpoint. */
+  private def windowStateFiles(fields: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val session = spark.newSession()
+    implicit val sqlCtx = session.sqlContext
+    import session.implicits._
+    val root = Files.createTempDirectory("pipe_provider_")
+    val ckpt = root.resolve("ckpt")
+    val mem = MemoryStream[(Long, String, Double)]
+    val spec = s"""{
+      "execution_mode": "Streaming", $fields
+      "sources": [ { "table_name": "prov_ev", "source": { "Memory": {} } } ],
+      "sql": "SELECT ts_ms, key, sum(value) OVER (PARTITION BY key ORDER BY ts_ms RANGE BETWEEN 60000 PRECEDING AND CURRENT ROW) AS s60 FROM prov_ev",
+      "sink": { "Parquet": {"path": "${root.resolve("out")}", "checkpoint": "$ckpt"} }
+    }"""
+    val handle = Pipeline.runJson(session, spec,
+      tables = Map("prov_ev" -> mem.toDF().toDF("ts_ms", "key", "value")))
+    try (0 until 2).foreach { t =>
+      mem.addData((0 until 12).map(i =>
+        (1704067200000L + 1000L * (12 * t + i), s"k${i % 3}", i.toDouble)): _*)
+      handle.query.get.processAllAvailable()
+    } finally handle.stop()
+    Files.walk(ckpt.resolve("state")).iterator().asScala
+      .filter(Files.isRegularFile(_)).map(_.getFileName.toString)
+      .filterNot(_.startsWith(".")).toSeq
+  }
+
+  test("state_store_provider is obeyed by window pipelines; none means RocksDB") {
+    val hdfs = windowStateFiles(""""state_store_provider": "hdfs",""")
+    assert(hdfs.exists(_.endsWith(".delta")) && !hdfs.exists(_.endsWith(".changelog")),
+      s"hdfs spec did not run on the HDFS-backed store: ${hdfs.take(8)}")
+    val default = windowStateFiles("")
+    assert(default.exists(_.endsWith(".changelog")) && !default.exists(_.endsWith(".delta")),
+      s"window pipeline without a provider did not run on RocksDB: ${default.take(8)}")
+    // request mode: the session's provider when its queries started
+    import graft.streaming.StateStoreConf
+    Seq(""""state_store_provider": "hdfs",""" -> StateStoreConf.HdfsProvider,
+        "" -> StateStoreConf.RocksDbProvider).foreach { case (fields, want) =>
+      val session = spark.newSession()
+      implicit val sqlCtx = session.sqlContext
+      import session.implicits._
+      val mem = MemoryStream[(Long, String, Double)]
+      val handle = Pipeline.runJson(session, s"""{
+        "execution_mode": "Request", $fields
+        "sources": [ { "table_name": "prov_req", "source": { "Memory": {} } } ],
+        "window": { "aggs": [ {"name": "s10", "kind": "sum", "range_ms": 10000} ] }
+      }""", tables = Map("prov_req" -> mem.toDF().toDF("ts_ms", "key", "value")))
+      try assert(session.conf.get(StateStoreConf.ProviderKey) == want, fields)
+      finally handle.stop()
+    }
+  }
+
+  test("a spec carrying the removed engine field is rejected at parse time") {
+    val before = spark.streams.active.length
+    val err = intercept[RuntimeException](Pipeline.runJson(spark, """{
+      "execution_mode": "Streaming", "engine": "fmgws",
+      "sources": [ { "table_name": "eng_ev", "source": { "Memory": {} } } ],
+      "sql": "SELECT 1 AS one FROM eng_ev",
+      "sink": { "Memory": {"table_name": "eng_out"} }
+    }"""))
+    assert(err.getMessage.contains("one engine"), err.getMessage)
+    assert(spark.streams.active.length == before, "a query started anyway")
+  }
+
   test("Datagen source: field generators produce the declared columns deterministically") {
     val spec = """{
       "execution_mode": "Batch",

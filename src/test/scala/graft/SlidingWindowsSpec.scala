@@ -68,20 +68,13 @@ class SlidingWindowsSpec extends AnyFunSuite {
   }
 
   private def runStreaming(batches: Seq[Seq[(Long, String, Double)]],
-                           lateness: Long, tileGran: Long,
-                           tws: Boolean = false): Set[(Long, String, Double, Double, Double, Double, Double, Double)] = {
+                           lateness: Long, tileGran: Long): Set[(Long, String, Double, Double, Double, Double, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // the TWS builder sets the session's state-store provider; restore so
-    // the FMGWS runs in this suite use the provider they document
-    graft.streaming.StateStoreConf.withSaved(spark) {
     val mem = MemoryStream[(Long, String, Double)]
     val df = mem.toDF().toDF("ts_ms", "key", "value")
-    val out =
-      if (tws) graft.streaming.SlidingWindowsTws.streaming(df, "key", "ts_ms", "value", specs,
-        latenessMs = lateness, tileGranularityMs = tileGran)
-      else SlidingWindows.streaming(df, "key", "ts_ms", "value", specs,
-        latenessMs = lateness, tileGranularityMs = tileGran)
+    val out = SlidingWindows.streaming(df, "key", "ts_ms", "value", specs,
+      latenessMs = lateness, tileGranularityMs = tileGran)
     val qname = s"slwin_out_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(qname).trigger(Trigger.ProcessingTime(0)).start()
@@ -98,7 +91,6 @@ class SlidingWindowsSpec extends AnyFunSuite {
         R.r6(r.getDouble(3)), r.getDouble(4), r.getDouble(5), r.getDouble(6),
         R.r6(r.getDouble(7)))).toSet
     } finally q.stop()
-    }
   }
 
   test("streaming engine == batch OVER windows, in-order single batch") {
@@ -107,13 +99,21 @@ class SlidingWindowsSpec extends AnyFunSuite {
     assert(got == batchReference(evs))
   }
 
-  test("streaming engine == batch OVER windows, out-of-order micro-batches with lateness") {
-    val rnd = new scala.util.Random(77)
+  private def outOfOrderParity(seed: Int): Unit = {
+    val rnd = new scala.util.Random(seed)
     val shuffled = rnd.shuffle(events)
     // 12 batches of 50, each locally shuffled: within-lateness disorder
     val batches = shuffled.sortBy(_._1).grouped(60).toSeq.map(b => rnd.shuffle(b))
     val got = runStreaming(batches, lateness = 120000, tileGran = 3000)
-    assert(got == batchReference(events))
+    assert(got == batchReference(events), s"delivery seed $seed")
+  }
+
+  test("streaming engine == batch OVER windows, out-of-order micro-batches with lateness") {
+    outOfOrderParity(77)
+  }
+
+  test("streaming engine == batch OVER windows, out-of-order, delivery seed 99") {
+    outOfOrderParity(99)
   }
 
   test("q_window_streaming catalog entry == batch OVER windows on sf0.001 events") {
@@ -137,48 +137,13 @@ class SlidingWindowsSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("transformWithState engine == batch OVER windows, out-of-order micro-batches with lateness") {
-    val rnd = new scala.util.Random(99)
-    val batches = rnd.shuffle(events).sortBy(_._1).grouped(60).toSeq.map(b => rnd.shuffle(b))
-    val got = runStreaming(batches, lateness = 120000, tileGran = 3000, tws = true)
-    assert(got == batchReference(events))
-  }
-
-  test("transformWithState engine == batch OVER windows, in-order") {
-    val got = runStreaming(Seq(events), lateness = 0, tileGran = 2000, tws = true)
-    assert(got == batchReference(events))
-  }
-
-  test("transformWithState engine leaves the fired timer to Spark: no failed timer deletes") {
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    spark.sparkContext // Spark (re)configures logging on start: attach after it
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("timer-capture", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val timers = LoggerContext.getContext(false).getLogger(
-      "org.apache.spark.sql.execution.streaming.operators.stateful.transformwithstate.timers.TimerStateImpl")
-    timers.addAppender(capture)
-    val got = try {
-      val rnd = new scala.util.Random(99)
-      val batches = rnd.shuffle(events).sortBy(_._1).grouped(60).toSeq.map(b => rnd.shuffle(b))
-      runStreaming(batches, lateness = 120000, tileGran = 3000, tws = true)
-    } finally { timers.removeAppender(capture); capture.stop() }
-    assert(got == batchReference(events))
-    val failed = seen.toArray.map(_.toString).filter(_.contains("Failed to delete timer"))
-    assert(failed.isEmpty, s"${failed.length} failed timer deletes, e.g. ${failed.headOption}")
-  }
-
-  /** Soak for the default (TWS) engine at the state shape the flip to
-    * default assumes: thousands of distinct keys (granular per-bucket
-    * MapState rows, per-key timers) plus one hot key holding ~20% of all
-    * rows (skewed state partition). Integer values keep sums exact under
-    * any accumulation order.
+  /** Soak for the streaming engine at a production state shape:
+    * thousands of distinct keys (per-key state rows and event-time
+    * timeouts) plus one hot key holding ~20% of all rows (skewed state
+    * partition). Integer values keep sums exact under any accumulation
+    * order.
     */
-  test("TWS soak: 3k keys + hot key (20% of rows) == batch OVER, exactly-once") {
+  test("streaming engine soak: 3k keys + hot key (20% of rows) == batch OVER, exactly-once") {
     val n = 30000
     val soak: Seq[(Long, String, Double)] = (0 until n).map { i =>
       val key = if (i % 5 == 0) "hot" else s"k${i % 3001}"
@@ -186,7 +151,7 @@ class SlidingWindowsSpec extends AnyFunSuite {
     }
     val rnd = new scala.util.Random(7)
     val batches = soak.grouped(10000).toSeq.map(b => rnd.shuffle(b))
-    val got = runStreaming(batches, lateness = 600000, tileGran = 60000, tws = true)
+    val got = runStreaming(batches, lateness = 600000, tileGran = 60000)
     assert(got.size == n, s"exactly-once violated: ${got.size} of $n rows")
     assert(got == batchReference(soak))
   }
@@ -281,20 +246,20 @@ class SlidingWindowsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("multi-granularity tiles: long-frame parity with coarse coverage (2s/10s/60s hierarchy)") {
+  // 5-min RANGE frames over ~10 min of events force interiors to be
+  // covered by 60 s tiles (greedy walk), with 10 s / 2 s tiles at edges
+  private val longSpecs = Seq(
+    AggSpec("sum_5m", "sum", RangeMs(300000)),
+    AggSpec("cnt_5m", "count", RangeMs(300000)),
+    AggSpec("min_5m", "min", RangeMs(300000)),
+    AggSpec("top_5m", "top", RangeMs(300000), 3))
+
+  private def longFrameReference(evs: Seq[(Long, String, Double)])
+      : Set[(Long, String, Double, Double, Double, Double, String)] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // 600 events over ~10 min; 5-min RANGE frames force interiors to be
-    // covered by 60 s tiles (greedy walk), with 10 s / 2 s tiles at edges
-    val evs = events
-    val longSpecs = Seq(
-      AggSpec("sum_5m", "sum", RangeMs(300000)),
-      AggSpec("cnt_5m", "count", RangeMs(300000)),
-      AggSpec("min_5m", "min", RangeMs(300000)),
-      AggSpec("top_5m", "top", RangeMs(300000), 3))
     GraftSession.prepare(spark, null)
     evs.toDF("ts_ms", "key", "value").createOrReplaceTempView("tile_evt")
-    val want = spark.sql("""
+    spark.sql("""
       SELECT ts_ms, key, value,
              sum(value) OVER w AS sum_5m, count(value) OVER w AS cnt_5m,
              min(value) OVER w AS min_5m, top(value, 3) OVER w AS top_5m
@@ -302,17 +267,16 @@ class SlidingWindowsSpec extends AnyFunSuite {
         RANGE BETWEEN 300000 PRECEDING AND CURRENT ROW)
     """).collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
       R.r6(r.getDouble(3)), r.getLong(4).toDouble, r.getDouble(5), r.getString(6))).toSet
+  }
 
-    // batch sweep with hierarchy
-    val gotBatch = SlidingWindows.batchCompute(evs.toDF("ts_ms", "key", "value"),
-        "key", "ts_ms", "value", longSpecs, tileGranularityMs = 2000,
-        coarseTilesMs = Seq(10000, 60000))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-        R.r6(r.getDouble(3)), r.getDouble(4), r.getDouble(5), r.getString(6))).toSet
-    assert(gotBatch == want)
-
-    // streaming engine with hierarchy, out-of-order arrival
-    val rnd = new scala.util.Random(31)
+  /** Streaming engine with the 2s/10s/60s hierarchy, out-of-order arrival
+    * in the delivery order drawn from `seed`. */
+  private def longFrameStreamingParity(seed: Int): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val evs = events
+    val want = longFrameReference(evs)
+    val rnd = new scala.util.Random(seed)
     val batches = rnd.shuffle(evs).sortBy(_._1).grouped(100).toSeq.map(b => rnd.shuffle(b))
     val mem = MemoryStream[(Long, String, Double)]
     val out = SlidingWindows.streaming(mem.toDF().toDF("ts_ms", "key", "value"),
@@ -330,57 +294,29 @@ class SlidingWindowsSpec extends AnyFunSuite {
       q.processAllAvailable()
       val got = spark.table(qname).collect().map(r => (r.getLong(0), r.getString(1),
         r.getDouble(2), R.r6(r.getDouble(3)), r.getDouble(4), r.getDouble(5), r.getString(6))).toSet
-      assert(got == want)
+      assert(got == want, s"delivery seed $seed")
     } finally q.stop()
   }
 
-  test("TWS multi-granularity tiles: long-frame parity with 2s/10s/60s hierarchy") {
+  test("multi-granularity tiles: long-frame parity with coarse coverage (2s/10s/60s hierarchy)") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    GraftSession.prepare(spark, null)
     val evs = events
-    val longSpecs = Seq(
-      AggSpec("sum_5m", "sum", RangeMs(300000)),
-      AggSpec("cnt_5m", "count", RangeMs(300000)),
-      AggSpec("min_5m", "min", RangeMs(300000)),
-      AggSpec("top_5m", "top", RangeMs(300000), 3))
-    evs.toDF("ts_ms", "key", "value").createOrReplaceTempView("tws_tile_evt")
-    val want = spark.sql("""
-      SELECT ts_ms, key, value,
-             sum(value) OVER w AS sum_5m, count(value) OVER w AS cnt_5m,
-             min(value) OVER w AS min_5m, top(value, 3) OVER w AS top_5m
-      FROM tws_tile_evt WINDOW w AS (PARTITION BY key ORDER BY ts_ms
-        RANGE BETWEEN 300000 PRECEDING AND CURRENT ROW)
-    """).collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-      R.r6(r.getDouble(3)), r.getLong(4).toDouble, r.getDouble(5), r.getString(6))).toSet
-
-    val rnd = new scala.util.Random(47)
-    val batches = rnd.shuffle(evs).sortBy(_._1).grouped(100).toSeq.map(b => rnd.shuffle(b))
-    graft.streaming.StateStoreConf.withSaved(spark) {
-    val mem = MemoryStream[(Long, String, Double)]
-    val out = graft.streaming.SlidingWindowsTws.streaming(
-      mem.toDF().toDF("ts_ms", "key", "value"),
-      "key", "ts_ms", "value", longSpecs, latenessMs = 60000,
-      tileGranularityMs = 2000, coarseTilesMs = Seq(10000, 60000))
-    val qname = s"tws_tile_${System.nanoTime()}"
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName(qname).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      val keys = evs.map(_._2).distinct
-      mem.addData(keys.map(k => (SlidingWindows.FLUSH_TS, k, 0.0)): _*)
-      q.processAllAvailable()
-      mem.addData((SlidingWindows.FLUSH_TS, keys.head, 0.0))
-      q.processAllAvailable()
-      val got = spark.table(qname).collect().map(r => (r.getLong(0), r.getString(1),
-        r.getDouble(2), R.r6(r.getDouble(3)), r.getDouble(4), r.getDouble(5),
-        r.getString(6))).toSet
-      assert(got == want, "TWS with coarse hierarchy == batch OVER")
-    } finally q.stop()
-    }
+    val want = longFrameReference(evs)
+    // batch sweep with hierarchy
+    val gotBatch = SlidingWindows.batchCompute(evs.toDF("ts_ms", "key", "value"),
+        "key", "ts_ms", "value", longSpecs, tileGranularityMs = 2000,
+        coarseTilesMs = Seq(10000, 60000))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
+        R.r6(r.getDouble(3)), r.getDouble(4), r.getDouble(5), r.getString(6))).toSet
+    assert(gotBatch == want)
+    longFrameStreamingParity(31)
   }
 
-  test("TWS engine multi-column: heterogeneous agg args == batch OVER") {
+  test("multi-granularity tiles: streaming long-frame parity, delivery seed 47") {
+    longFrameStreamingParity(47)
+  }
+
+  test("streaming engine multi-column: heterogeneous agg args == batch OVER") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     GraftSession.prepare(spark, null)
@@ -389,24 +325,23 @@ class SlidingWindowsSpec extends AnyFunSuite {
       AggSpec("s10", "sum", RangeMs(10000)),
       AggSpec("tfc", "topn_frequency", RangeMs(10000), 2, vIdx = 0, vStr = true),
       AggSpec("sc", "sum_cate", RangeMs(10000), 0, vIdx = 0, cIdx = 0))
-    cateEvents.toDF("ts_ms", "key", "value", "cate").createOrReplaceTempView("tws_ml_evt")
+    cateEvents.toDF("ts_ms", "key", "value", "cate").createOrReplaceTempView("mc_ml_evt")
     val want = spark.sql("""
       SELECT ts_ms, key, value, cate,
              sum(value) OVER w AS s10,
              topn_frequency(cate, 2) OVER w AS tfc,
              sum_cate(value, cate) OVER w AS sc
-      FROM tws_ml_evt WINDOW w AS (PARTITION BY key ORDER BY ts_ms
+      FROM mc_ml_evt WINDOW w AS (PARTITION BY key ORDER BY ts_ms
         RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW)
     """).collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
       r.getString(3), R.r6(r.getDouble(4)), r.getString(5), r.getString(6))).toSet
 
-    graft.streaming.StateStoreConf.withSaved(spark) {
     val mem = MemoryStream[(Long, String, Double, String)]
-    val out = graft.streaming.SlidingWindowsTws.streamingMulti(
+    val out = SlidingWindows.streamingMulti(
       mem.toDF().toDF("ts_ms", "key", "value", "cate"),
       "key", "ts_ms", Seq("value"), Seq("cate"), specs, latenessMs = 0,
       tileGranularityMs = 3000)
-    val qname = s"tws_ml_${System.nanoTime()}"
+    val qname = s"mc_ml_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(qname).trigger(Trigger.ProcessingTime(0)).start()
     try {
@@ -421,7 +356,6 @@ class SlidingWindowsSpec extends AnyFunSuite {
         r.getString(6))).toSet
       assert(got == want)
     } finally q.stop()
-    }
   }
 
   // ------------------------------------------------------------------
@@ -517,21 +451,16 @@ class SlidingWindowsSpec extends AnyFunSuite {
     assert(got == whereReference())
   }
 
-  private def runWhereStreaming(tws: Boolean): Set[Seq[Any]] = {
+  private def runWhereStreaming(): Set[Seq[Any]] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.streaming.StateStoreConf.withSaved(spark) {
     val rnd = new scala.util.Random(13)
     val batches = whereEvents.sortBy(_._1).grouped(80).toSeq.map(b => rnd.shuffle(b))
     val mem = MemoryStream[(Long, String, Double, Double, String)]
     val df = mem.toDF().toDF("ts_ms", "key", "value", "big", "cate")
-    val out =
-      if (tws) graft.streaming.SlidingWindowsTws.streamingMulti(df, "key", "ts_ms",
-        Seq("value", "big"), Seq("cate"), whereSpecs, latenessMs = 60000,
-        tileGranularityMs = 3000)
-      else SlidingWindows.streamingMulti(df, "key", "ts_ms",
-        Seq("value", "big"), Seq("cate"), whereSpecs, latenessMs = 60000,
-        tileGranularityMs = 3000)
+    val out = SlidingWindows.streamingMulti(df, "key", "ts_ms",
+      Seq("value", "big"), Seq("cate"), whereSpecs, latenessMs = 60000,
+      tileGranularityMs = 3000)
     val qname = s"slwin_where_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(qname).trigger(Trigger.ProcessingTime(0)).start()
@@ -544,15 +473,10 @@ class SlidingWindowsSpec extends AnyFunSuite {
       q.processAllAvailable()
       spark.table(qname).collect().map(normRow).toSet
     } finally q.stop()
-    }
   }
 
   test("streaming engine == batch OVER for the full ML family, out-of-order") {
-    assert(runWhereStreaming(tws = false) == whereReference())
-  }
-
-  test("TWS engine == batch OVER for the full ML family, out-of-order") {
-    assert(runWhereStreaming(tws = true) == whereReference())
+    assert(runWhereStreaming() == whereReference())
   }
 
   test("idle-source watermark: min-policy stalls on an idle source, max policy unblocks") {

@@ -135,9 +135,9 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   /** Runs a windowed Streaming spec on a fresh session with no
     * checkpoint-manager setting through `triggers` micro-batches into a
     * Parquet sink; returns the checkpoint directory and the session.
-    * `engine` is spliced into the spec (empty: the default engine on
+    * `fields` are spliced into the spec (empty: window pipelines' default
     * RocksDB state). */
-  private def runPipeline(triggers: Int, engine: String = ""): (JPath, SparkSession) = {
+  private def runPipeline(triggers: Int, fields: String = ""): (JPath, SparkSession) = {
     val session = spark.newSession()
     session.conf.unset(LocalCheckpointFileManager.ConfKey)
     val root = Files.createTempDirectory("lcfm_pipeline_")
@@ -146,7 +146,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     import session.implicits._
     val mem = MemoryStream[(Long, String, Double)]
     val spec = s"""{
-      "execution_mode": "Streaming", $engine
+      "execution_mode": "Streaming", $fields
       "sources": [ { "table_name": "lcfm_ev", "source": { "Memory": {} } } ],
       "sql": "SELECT ts_ms, key, sum(value) OVER (PARTITION BY key ORDER BY ts_ms RANGE BETWEEN 60000 PRECEDING AND CURRENT ROW) AS s60 FROM lcfm_ev",
       "sink": { "Parquet": {"path": "${root.resolve("out")}", "checkpoint": "$ckpt"} }
@@ -184,7 +184,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     rec.start()
     // on the HDFS-backed state store every checkpoint file, snapshots
     // included, goes through the checkpoint manager
-    val (ckpt, _) = try runPipeline(4, """"engine": "fmgws", "state_store_provider": "hdfs",""")
+    val (ckpt, _) = try runPipeline(4, """"state_store_provider": "hdfs",""")
     finally rec.stop()
     val dump = Files.createTempFile("lcfm_forks_", ".jfr")
     rec.dump(dump)
