@@ -8,7 +8,7 @@
 # streaming query with the RocksDB provider forced globally
 # (SPARK_GRAFT_STATE_PROVIDER + the two per-entry provider knobs) and
 # replays the same DuckDB value compare, so the scale-path provider is
-# answer-checked every round, not only when SteadyStream runs.
+# answer-checked every round, not only in one-off steady-state runs.
 #
 # Usage: scripts/rocksdb_sweep.sh [sfDir] [outJson]
 set -euo pipefail

@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** Shared measurement plumbing for the bench mains and tools — one
-  * implementation of the percentile routine and the progress-collecting
-  * listener (previously duplicated across Bench and SteadyStream, where a
-  * fix to one copy would silently miss the others).
+  * implementation of the percentile routine, the progress-collecting
+  * listener and the report serializer, so a fix lands in every caller.
+  * (The steady-stream, spill and cluster-bench records — `BENCH_steady_*`,
+  * `BENCH_spill_r15.json`, `CLUSTER_BENCH.json` — were produced through
+  * these same routines by tools that have since been retired.)
   */
 object Metrics {
 
@@ -49,58 +51,6 @@ object Metrics {
     (buf, listener)
   }
 
-  /** Executor-side memory-pressure counters for the spill probe (VERDICT
-    * r14 stretch #9): every steady measurement so far ran with generous
-    * heap, so "the engines spill instead of falling over" was a design
-    * claim, not a record. Accumulated from Spark's own task metrics — the
-    * same numbers the UI's spill columns read — so a capped-heap ladder
-    * can attribute degradation to spill volume rather than guessing. */
-  final class SpillStats {
-    import java.util.concurrent.atomic.AtomicLong
-    val memSpilled = new AtomicLong
-    val diskSpilled = new AtomicLong
-    val peakTaskExecMem = new AtomicLong
-    val tasks = new AtomicLong
-    val tasksSpilled = new AtomicLong
-    val failedTasks = new AtomicLong
-    def snapshot: Map[String, Any] = Map(
-      "heap_max_mb" -> Runtime.getRuntime.maxMemory / (1024 * 1024),
-      "mem_spilled_mb" -> memSpilled.get / (1024 * 1024),
-      "disk_spilled_mb" -> diskSpilled.get / (1024 * 1024),
-      "peak_task_exec_mem_mb" -> peakTaskExecMem.get / (1024 * 1024),
-      "tasks" -> tasks.get,
-      "tasks_spilled" -> tasksSpilled.get,
-      "failed_tasks" -> failedTasks.get)
-  }
-
-  /** Registers a SparkListener that feeds a [[SpillStats]] from task-end
-    * metrics; listener delivery is async — callers snapshot after the
-    * work's actions have completed (the bus drains on SparkContext.stop,
-    * and these are cumulative counters, so a late event only under-counts
-    * a final snapshot taken too early, never corrupts it). */
-  def collectSpill(spark: SparkSession): SpillStats = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val stats = new SpillStats
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        stats.tasks.incrementAndGet()
-        if (!e.taskInfo.successful) { stats.failedTasks.incrementAndGet(); () }
-        val m = e.taskMetrics
-        if (m != null) {
-          stats.memSpilled.addAndGet(m.memoryBytesSpilled)
-          stats.diskSpilled.addAndGet(m.diskBytesSpilled)
-          if (m.memoryBytesSpilled + m.diskBytesSpilled > 0)
-            stats.tasksSpilled.incrementAndGet()
-          var cur = stats.peakTaskExecMem.get
-          while (m.peakExecutionMemory > cur &&
-            !stats.peakTaskExecMem.compareAndSet(cur, m.peakExecutionMemory))
-            cur = stats.peakTaskExecMem.get
-        }
-      }
-    })
-    stats
-  }
-
   /** Minimal JSON serializer for the measurement tools' report maps —
     * one implementation (string escaping included) instead of a
     * hand-rolled copy per tool, where the copies had already diverged on
@@ -128,11 +78,10 @@ object Metrics {
   }
 
   /** Parses the flat `"queries":{name:seconds,...}` map out of a bench
-    * record — the ONE implementation (ADVICE r16: Bench's outlier
-    * reference and ClusterBench's entry selection each carried an ad-hoc
-    * scan-to-first-`}` copy, which silently returns wrong/partial entries
-    * if the record format ever nests an object inside `queries`). Fails
-    * loudly on nesting instead: a format change must break the caller. */
+    * record — the ONE implementation (an ad-hoc scan-to-first-`}` copy
+    * silently returns wrong/partial entries if the record format ever
+    * nests an object inside `queries`). Fails loudly on nesting instead:
+    * a format change must break the caller. */
   def parseQueriesMap(txt: String): Map[String, Double] = {
     val marker = "\"queries\":{"
     val qi = txt.indexOf(marker)

@@ -76,12 +76,12 @@ import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
   */
 object Pipeline {
 
-  /** A running (or completed) pipeline. */
   /** Raw-row stream + slot layout feeding live request evaluation. */
   private final case class LiveFeed(raw: DataFrame, rawKeyCol: String,
                                     rawTsCol: String, valueCols: Seq[String],
                                     strCols: Seq[String], specs: Seq[AggSpec])
 
+  /** A running (or completed) pipeline. */
   final case class Handle(
       mode: String,
       result: Option[DataFrame],
@@ -483,8 +483,6 @@ object Pipeline {
         if (cateCol != null) Seq("cate") else Nil, specs)))
   }
 
-  /** Serving tail shared by both request-mode variants: upsert store fed
-    * by the streaming window output + the HTTP endpoint. */
   /** Serving tail shared by both request-mode variants. `liveFeed` wires
     * the reference's request-path semantics: the RAW input rows (frame,
     * value-slot columns, string-slot columns, specs) stream into a

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 
@@ -27,8 +28,10 @@ object GraftFunctions {
     }
   }
 
-  /** name -> builder for every function in the family. */
-  def builders: Seq[(String, Seq[Expression] => Expression)] = {
+  /** name -> builder for every function in the family. Built once: the
+    * builder objects double as the registry's identity check in
+    * [[register]], and [[graft.GraftExtensions]] injects these same ones. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = {
     val out = Seq.newBuilder[(String, Seq[Expression] => Expression)]
 
     out += "text_stats" -> { args => TextStatsExpr(args(0)) }
@@ -83,10 +86,16 @@ object GraftFunctions {
     out.result()
   }
 
+  /** Registers the family into `spark`'s session registry. Idempotent: a
+    * name already bound to its builder here (an earlier call, or the
+    * extensions path) is skipped, so repeated calls neither replace the
+    * function nor log Spark's "replaced a previously registered function"
+    * warning; a name bound to anything else is replaced. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      registry.createOrReplaceTempFunction(name, b, "scala_udf")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq b))
+        registry.createOrReplaceTempFunction(name, b, "scala_udf")
     }
   }
 }

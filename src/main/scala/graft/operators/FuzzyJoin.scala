@@ -117,9 +117,9 @@ object FuzzyJoin {
 
   /** Estimated blocking fan-out per input record beyond which the
     * ladder widens the key — one bound per rung, calibrated against six
-    * MEASURED corpora (tools/FuzzyStats on sf0.1 / ScaleUp 10x / 100x;
-    * tools/FuzzyDecade's digit-dense synthetic at 30k / 300k —
-    * FUZZY_DECADE_r13.json):
+    * MEASURED corpora (the customer x supplier join on sf0.1 / ScaleUp
+    * 10x / 100x, and a digit-dense synthetic at 30k / 300k; the records
+    * are FUZZY_DECADE_r13.json and FUZZY_DECADE_r14.json):
     *
     *   corpus            f1/rec   f2/rec   fastest width (measured)
     *   sf0.1               119       6.3    w1  (2.4 s vs 4.3 s w2)

@@ -8,6 +8,17 @@ import org.apache.spark.sql.functions.col
 import graft.streaming.SlidingWindows
 import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
 
+/** What the live request path needs from a buffer — implemented by the
+  * driver-memory [[ServingBuffer]] (serving-parity/test path) and the
+  * scale path [[ShardedServingBuffer]] (key-routed per-shard row logs).
+  */
+trait LiveBuffer {
+  def specs: Seq[AggSpec]
+  def eval(key: String, atTs: Option[Long] = None): Option[(Long, Seq[(String, Any)])]
+  def evalBatch(reqs: Seq[(String, Option[Long])])
+      : IndexedSeq[Option[(Long, Seq[(String, Any)])]]
+}
+
 /** Per-key row buffer for LIVE request-time window evaluation — the
   * reference's WindowRequestOperator answers each request by evaluating
   * every aggregate AT the request's timestamp against the rows buffered in
@@ -29,23 +40,9 @@ import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
   * production deployment shards this across a serving tier exactly as it
   * would the store.
   */
-/** What the live request path needs from a buffer — implemented by the
-  * driver-memory [[ServingBuffer]] (serving-parity/test path) and the
-  * scale path [[ShardedServingBuffer]] (key-routed per-shard row logs).
-  */
-trait LiveBuffer {
-  def specs: Seq[AggSpec]
-  def eval(key: String, atTs: Option[Long] = None): Option[(Long, Seq[(String, Any)])]
-  def evalBatch(reqs: Seq[(String, Option[Long])])
-      : IndexedSeq[Option[(Long, Seq[(String, Any)])]]
-}
-
 final class ServingBuffer(val specs: Seq[AggSpec]) extends LiveBuffer {
 
-  private val horizonMs = 2 * specs.map(_.frame).collect { case RangeMs(l) => l }
-    .foldLeft(0L)(math.max)
-  private val keepRows = 2 * specs.map(_.frame).collect { case RowsN(n) => n + 1 }
-    .foldLeft(0)(math.max)
+  private val (horizonMs, keepRows) = ServingBuffer.retention(specs)
 
   private val m =
     new ConcurrentHashMap[String, Vector[(Long, Array[Double], Array[String])]]()
@@ -103,16 +100,37 @@ final class ServingBuffer(val specs: Seq[AggSpec]) extends LiveBuffer {
     }
   }
 
-  /** Evaluate a whole batch of requests in ONE pass — the serving-side
-    * analog of the reference coalescing all pending requests into one
-    * RecordBatch through the dataflow (request_source.rs:38-49). Distinct
-    * keys hold independent buffered state, so the shared work is the
-    * dispatch, not the fold: the batch fans out across the common pool
-    * (every core folds a different key) instead of serializing behind the
-    * HTTP worker count. Results are positional; each goes through the same
-    * per-(key, generation) memo as [[eval]].
-    */
+  /** Evaluate a whole batch of requests in ONE pass
+    * ([[ServingBuffer.fanOut]]); each result goes through the same
+    * per-(key, generation) memo as [[eval]]. */
   def evalBatch(reqs: Seq[(String, Option[Long])])
+      : IndexedSeq[Option[(Long, Seq[(String, Any)])]] =
+    ServingBuffer.fanOut(reqs)(eval)
+
+  def bufferedKeys: Int = m.size
+  def rowCount(key: String): Int = Option(m.get(key)).map(_.length).getOrElse(0)
+}
+
+object ServingBuffer {
+
+  /** The serving retention derived from `specs`, shared by the in-memory
+    * buffer and the sharded row logs' compaction: (horizonMs, keepRows) =
+    * twice the widest RANGE span and twice the widest ROWS frame's
+    * `n + 1` rows — one horizon of slack, see [[ServingBuffer]]. */
+  private[serving] def retention(specs: Seq[AggSpec]): (Long, Int) = (
+    2 * specs.map(_.frame).collect { case RangeMs(l) => l }.foldLeft(0L)(math.max),
+    2 * specs.map(_.frame).collect { case RowsN(n) => n + 1 }.foldLeft(0)(math.max))
+
+  /** Evaluates a batch of requests with `eval`, results positional — the
+    * serving-side analog of the reference coalescing all pending requests
+    * into one RecordBatch through the dataflow (request_source.rs:38-49).
+    * Distinct keys hold independent buffered state, so the shared work is
+    * the dispatch, not the fold: the batch fans out across the common pool
+    * (every core folds a different key) instead of serializing behind the
+    * HTTP worker count.
+    */
+  private[serving] def fanOut(reqs: Seq[(String, Option[Long])])
+            (eval: (String, Option[Long]) => Option[(Long, Seq[(String, Any)])])
       : IndexedSeq[Option[(Long, Seq[(String, Any)])]] = {
     val in = reqs.toIndexedSeq
     val out = new Array[Option[(Long, Seq[(String, Any)])]](in.length)
@@ -130,12 +148,6 @@ final class ServingBuffer(val specs: Seq[AggSpec]) extends LiveBuffer {
       }
     out.toIndexedSeq
   }
-
-  def bufferedKeys: Int = m.size
-  def rowCount(key: String): Int = Option(m.get(key)).map(_.length).getOrElse(0)
-}
-
-object ServingBuffer {
 
   /** `foreachBatch` feeder over the engine's INPUT frame (key, ts, value
     * slots, string slots). O(batch rows) driver transfer — the same

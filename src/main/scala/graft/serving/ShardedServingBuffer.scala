@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.streaming.SlidingWindows
-import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
+import graft.streaming.SlidingWindows.AggSpec
 
 /** The live request-evaluation buffer SHARDED off the driver — the scale
   * path for [[ServingBuffer]], completing what [[ShardedFeatureStore]]
@@ -82,16 +82,7 @@ final class ShardedServingBuffer(val root: String, val numShards: Int,
     // same way the driver-memory buffer does
     reqs.map(r => ShardedFeatureStore.shardOf(r._1, numShards))
       .distinct.foreach(refresh)
-    val in = reqs.toIndexedSeq
-    val out = new Array[Option[(Long, Seq[(String, Any)])]](in.length)
-    if (in.length < 2) {
-      var i = 0
-      while (i < in.length) { out(i) = eval(in(i)._1, in(i)._2); i += 1 }
-    } else
-      java.util.stream.IntStream.range(0, in.length).parallel().forEach { i =>
-        out(i) = eval(in(i)._1, in(i)._2)
-      }
-    out.toIndexedSeq
+    ServingBuffer.fanOut(reqs)(eval)
   }
 
   def bufferedKeys: Int = {
@@ -115,10 +106,7 @@ object ShardedServingBuffer {
                (batch: DataFrame, batchId: Long): Unit = {
     if (!batch.isEmpty) {
       val nv = valueCols.length; val ns = strCols.length
-      val horizonMs = 2 * specs.map(_.frame).collect { case RangeMs(l) => l }
-        .foldLeft(0L)(math.max)
-      val keepRows = 2 * specs.map(_.frame).collect { case RowsN(n) => n + 1 }
-        .foldLeft(0)(math.max)
+      val (horizonMs, keepRows) = ServingBuffer.retention(specs)
       val rootPath = root; val nShards = numShards
       // NULL keys coalesce to "null" BEFORE the md5 — a null __k would
       // null the shard expression and route the row away from the task

@@ -26,6 +26,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * wrapper still wraps this manager, and durability is the stock one's:
   * neither fsyncs.
   *
+  * `createAtomic` does not create a missing parent directory; it fails
+  * with `NoSuchFileException`. That is what the stock manager for `file:`
+  * paths does (the FileContext-based one creates without `createParent`;
+  * only the FileSystem-based fallback for other schemes makes parents), so
+  * Spark's callers make their directories first. It also keeps a late
+  * write from re-creating a checkpoint that was deleted under it, as a
+  * RocksDB maintenance upload does after a temporary checkpoint is removed
+  * on stop: that upload fails and is logged instead.
+  *
   * Every other scheme (HDFS, S3, ...) goes to the stock manager unchanged.
   */
 class LocalCheckpointFileManager(path: Path, conf: Configuration) extends CheckpointFileManager {

@@ -35,6 +35,8 @@ import graft.streaming.SlidingWindows
   * at the ulp).
   *
   * Usage: runMain graft.tools.PipelineFuzz <outJson> [n] [seedBase]
+  *   [mixed|request]. `PipelineFuzzSpec` runs a seeded few documents of
+  *   each family through [[run]] on every test run.
   */
 object PipelineFuzz {
 
@@ -206,218 +208,216 @@ object PipelineFuzz {
     } finally handle.stop()
   }
 
+  /** One MIXED-family document: a random Streaming spec run as a real
+    * query, fed out of order, flushed, and value-compared against the same
+    * SQL on Catalyst batch. Returns (shape, source kind, failure). */
+  private def runMixedDoc(spark: SparkSession, i: Int, r: Random)
+      : (String, String, Option[String]) = {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val view = s"pf_in_$i"
+    val outName = s"pf_out_$i"
+
+    // ---- deterministic rows: ts strictly increasing, quarter values --
+    val nRows = 80 + r.nextInt(160)
+    val nKeys = 1 + r.nextInt(4)
+    val base = 1704067200000L
+    var ts = base
+    val rows = (0 until nRows).map { _ =>
+      ts += 1 + r.nextInt(5000)
+      (ts, s"k${r.nextInt(nKeys)}", r.nextInt(1000) / 4.0)
+    }
+    val spanMs = rows.last._1 - base
+
+    // ---- knobs -------------------------------------------------------
+    val srcKind = if (r.nextBoolean()) "Memory" else "Parquet"
+    val sinkMem = r.nextBoolean()
+    val lateness = spanMs + 3600000L
+    val gran = Seq(1000L, 5000L, 60000L, 600000L)(r.nextInt(4))
+    val withCoarse = r.nextInt(3) == 0
+    val parallelism = 1 + r.nextInt(4)
+    val provider = r.nextInt(3) match {
+      case 0 => """"state_store_provider": "rocksdb","""
+      case 1 => """"state_store_provider": "hdfs","""
+      case _ => ""
+    }
+
+    val root = GraftSession.tempDir(s"graft_pfz_${i}_")
+    val keys = rows.map(_._2).distinct
+
+    // ---- SQL shape -----------------------------------------------------
+    val shapeKind = r.nextInt(6)
+    val (sql, shapeName, needsFlush, outputMode) = shapeKind match {
+      case 0 | 1 => // stateless projection + filter
+        val cut = r.nextInt(1000) / 4.0
+        val op = if (r.nextBoolean()) ">" else "<="
+        (s"SELECT ts_ms, key, value * 2 AS v2 FROM $view WHERE value $op $cut",
+          "stateless", false, "append")
+      case 2 => // grouped aggregate, complete mode
+        val aggs = Seq("count(*) AS n", "sum(value) AS s", "min(value) AS mn",
+          "max(value) AS mx", "avg(value) AS av")
+        val k = 1 + r.nextInt(3)
+        val chosen = r.ints(0, aggs.length).distinct().limit(k)
+          .toArray.toSeq.sorted.map(aggs)
+        (s"SELECT key, ${chosen.mkString(", ")} FROM $view GROUP BY key",
+          "grouped", false, "complete")
+      case _ => // OVER windows through the sliding-window engine
+        val kinds = Seq("sum", "avg", "min", "max", "count", "stddev_samp")
+        val nAgg = 1 + r.nextInt(2)
+        val aggs = (0 until nAgg).map { a =>
+          val kind = kinds(r.nextInt(kinds.length))
+          val frame =
+            if (r.nextBoolean())
+              s"RANGE BETWEEN ${(1 + r.nextInt(120)) * 60000L} PRECEDING AND CURRENT ROW"
+            else s"ROWS BETWEEN ${1 + r.nextInt(80)} PRECEDING AND CURRENT ROW"
+          s"$kind(value) OVER (PARTITION BY key ORDER BY ts_ms $frame) AS w_$a"
+        }
+        (s"SELECT ts_ms, key, ${aggs.mkString(", ")} FROM $view",
+          "over", true, "append")
+    }
+
+    // ---- source + sink blocks ----------------------------------------
+    val mem =
+      if (srcKind == "Memory") Some(MemoryStream[(Long, String, Double)])
+      else None
+    if (srcKind == "Parquet") {
+      // data first; flush files appended AFTER the query starts
+      rows.toDF("ts_ms", "key", "value").coalesce(1).write.parquet(s"$root/in")
+    }
+    val srcJson =
+      if (srcKind == "Memory") s"""{ "table_name": "$view", "source": { "Memory": {} } }"""
+      else s"""{ "table_name": "$view", "source": { "Parquet": {"path": "$root/in"} } }"""
+    val sinkJson =
+      if (sinkMem) s"""{ "Memory": {"table_name": "$outName", "output_mode": "$outputMode"} }"""
+      else s"""{ "Parquet": {"path": "$root/out"} }"""
+    // complete mode needs the memory sink; parquet sinks are append-only
+    val sink = if (outputMode == "complete")
+      s"""{ "Memory": {"table_name": "$outName", "output_mode": "complete"} }"""
+    else sinkJson
+    val coarseJson =
+      if (withCoarse && needsFlush)
+        s""""operator_overrides": { "defaults": { "tuning": { "Window": {
+            "tiling": { "granularities_ms": [$gran, ${gran * 4}] } } } } },"""
+      else ""
+    val spec = s"""{
+      "execution_mode": "Streaming",
+      "parallelism": $parallelism,
+      $provider
+      $coarseJson
+      "event_time": { "window": {"allowed_lateness_ms": $lateness} },
+      "window": { "tile_granularity_ms": $gran },
+      "sources": [ $srcJson ],
+      "sql": ${graft.Metrics.toJson(sql)},
+      "sink": $sink
+    }"""
+
+    // ---- run streaming, feed out of order, flush, read back ----------
+    val outcome = guarded(spark) {
+      val tables = mem.map(m => Map(view -> m.toDF().toDF("ts_ms", "key", "value")))
+        .getOrElse(Map.empty[String, DataFrame])
+      val handle = Pipeline.runJson(spark, spec, tables)
+      try {
+        val q = handle.query.get
+        mem match {
+          case Some(m) =>
+            val shuffled = {
+              val a = scala.collection.mutable.ArrayBuffer(rows: _*)
+              // Fisher-Yates off the shape's own Random
+              for (j <- a.indices.reverse.dropRight(1)) {
+                val k = r.nextInt(j + 1); val t = a(j); a(j) = a(k); a(k) = t
+              }
+              a.toSeq
+            }
+            shuffled.grouped(50).foreach { b => m.addData(b: _*); q.processAllAvailable() }
+            if (needsFlush) {
+              m.addData(keys.map(k => (SlidingWindows.FLUSH_TS, k, 0.0)): _*)
+              q.processAllAvailable()
+              m.addData((SlidingWindows.FLUSH_TS, keys.head, 0.0))
+              q.processAllAvailable()
+            }
+          case None =>
+            q.processAllAvailable()
+            if (needsFlush) {
+              keys.map(k => (SlidingWindows.FLUSH_TS, k, 0.0))
+                .toDF("ts_ms", "key", "value")
+                .coalesce(1).write.mode("append").parquet(s"$root/in")
+              q.processAllAvailable()
+              Seq((SlidingWindows.FLUSH_TS, keys.head, 0.0))
+                .toDF("ts_ms", "key", "value")
+                .coalesce(1).write.mode("append").parquet(s"$root/in")
+              q.processAllAvailable()
+            }
+        }
+        val got = collect(
+          if (sink.contains("Memory")) spark.table(outName)
+          else spark.read.parquet(s"$root/out"))
+        // oracle: the same SQL on the same rows, plain Catalyst batch
+        rows.toDF("ts_ms", "key", "value").createOrReplaceTempView(view)
+        val want = collect(spark.sql(sql))
+        rowsEqual(got, want)
+      } finally handle.stop()
+    }
+    (shapeName, srcKind, outcome)
+  }
+
+  /** Runs `doc` with the session's shuffle and state-store settings
+    * restored afterwards (a spec's knobs are session-level); an exception
+    * is a failure, not an abort. */
+  private def guarded(spark: SparkSession)(doc: => Option[String]): Option[String] = {
+    val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    val savedState = graft.streaming.StateStoreConf.snapshot(spark)
+    try doc
+    catch {
+      case e: Exception =>
+        Some(s"exception: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(300)}")
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
+      graft.streaming.StateStoreConf.restore(spark, savedState)
+    }
+  }
+
+  /** Shape counts and failure lines of one fuzz run. */
+  final case class Report(shapes: Map[String, Int], failures: Seq[String])
+
+  /** Runs `n` documents of `family` — "mixed" (the batch-parity corpus)
+    * or "request" (request-mode documents vs the as-of oracle) — document
+    * `i` drawn from `new Random(seedBase + i)` alone. */
+  def run(spark: SparkSession, n: Int, seedBase: Long,
+          family: String = "mixed"): Report = {
+    val shapes = scala.collection.mutable.Map.empty[String, Int]
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (i <- 0 until n) {
+      val r = new Random(seedBase + i)
+      val (name, shape, src, outcome) =
+        if (family == "request")
+          (s"pfr_$i", "request", "-", guarded(spark)(runRequestDoc(spark, i, r, s"pfr_in_$i")))
+        else {
+          val (shape, src, outcome) = runMixedDoc(spark, i, r)
+          (s"pf_$i", shape, src, outcome)
+        }
+      shapes(shape) = shapes.getOrElse(shape, 0) + 1
+      outcome match {
+        case Some(err) =>
+          failures += s"$name (seed=${seedBase + i}, $shape, src=$src): $err"
+          println(s"[pfz] FAIL $name seed=${seedBase + i} $shape src=$src: $err")
+        case None =>
+          if (i % 10 == 0) println(s"[pfz] $name ok  $shape src=$src")
+      }
+    }
+    Report(shapes.toMap, failures.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("PIPELINE_FUZZ_r17.json")
     val n = args.lift(1).map(_.toInt).getOrElse(120)
     val seedBase = args.lift(2).map(_.toLong).getOrElse(73000L)
-    // family selector: "mixed" (default) = the r17 batch-parity corpus;
-    // "request" = request-mode documents vs the as-of oracle (r17 #6)
     val family = args.lift(3).getOrElse("mixed")
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val shapes = scala.collection.mutable.Map.empty[String, Int]
-    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-
-    if (family == "request") {
-      for (i <- 0 until n) {
-        val r = new Random(seedBase + i)
-        val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        val savedState = graft.streaming.StateStoreConf.snapshot(spark)
-        val outcome =
-          try runRequestDoc(spark, i, r, s"pfr_in_$i")
-          catch {
-            case e: Exception => Some(s"exception: " +
-              Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
-          } finally {
-            spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-            graft.streaming.StateStoreConf.restore(spark, savedState)
-          }
-        shapes("request") = shapes.getOrElse("request", 0) + 1
-        outcome match {
-          case Some(err) =>
-            failures += s"pfr_$i (seed=${seedBase + i}): $err"
-            println(s"[pfz] FAIL pfr_$i seed=${seedBase + i}: $err")
-          case None =>
-            if (i % 10 == 0) println(s"[pfz] pfr_$i ok")
-        }
-      }
-      writeReport(outJson, "request", n, seedBase, shapes, failures.toSeq)
-      spark.stop()
-      if (failures.nonEmpty) sys.exit(2)
-      return
-    }
-
-    for (i <- 0 until n) {
-      val r = new Random(seedBase + i)
-      val view = s"pf_in_$i"
-      val outName = s"pf_out_$i"
-
-      // ---- deterministic rows: ts strictly increasing, quarter values --
-      val nRows = 80 + r.nextInt(160)
-      val nKeys = 1 + r.nextInt(4)
-      val base = 1704067200000L
-      var ts = base
-      val rows = (0 until nRows).map { _ =>
-        ts += 1 + r.nextInt(5000)
-        (ts, s"k${r.nextInt(nKeys)}", r.nextInt(1000) / 4.0)
-      }
-      val spanMs = rows.last._1 - base
-
-      // ---- knobs -------------------------------------------------------
-      val srcKind = if (r.nextBoolean()) "Memory" else "Parquet"
-      val sinkMem = r.nextBoolean()
-      val lateness = spanMs + 3600000L
-      val gran = Seq(1000L, 5000L, 60000L, 600000L)(r.nextInt(4))
-      val withCoarse = r.nextInt(3) == 0
-      val parallelism = 1 + r.nextInt(4)
-      val provider = r.nextInt(3) match {
-        case 0 => """"state_store_provider": "rocksdb","""
-        case 1 => """"state_store_provider": "hdfs","""
-        case _ => ""
-      }
-
-      val root = GraftSession.tempDir(s"graft_pfz_${i}_")
-      val keys = rows.map(_._2).distinct
-
-      // ---- SQL shape -----------------------------------------------------
-      val shapeKind = r.nextInt(6)
-      val (sql, shapeName, needsFlush, outputMode) = shapeKind match {
-        case 0 | 1 => // stateless projection + filter
-          val cut = r.nextInt(1000) / 4.0
-          val op = if (r.nextBoolean()) ">" else "<="
-          (s"SELECT ts_ms, key, value * 2 AS v2 FROM $view WHERE value $op $cut",
-            "stateless", false, "append")
-        case 2 => // grouped aggregate, complete mode
-          val aggs = Seq("count(*) AS n", "sum(value) AS s", "min(value) AS mn",
-            "max(value) AS mx", "avg(value) AS av")
-          val k = 1 + r.nextInt(3)
-          val chosen = r.ints(0, aggs.length).distinct().limit(k)
-            .toArray.toSeq.sorted.map(aggs)
-          (s"SELECT key, ${chosen.mkString(", ")} FROM $view GROUP BY key",
-            "grouped", false, "complete")
-        case _ => // OVER windows through the sliding-window engine
-          val kinds = Seq("sum", "avg", "min", "max", "count", "stddev_samp")
-          val nAgg = 1 + r.nextInt(2)
-          val aggs = (0 until nAgg).map { a =>
-            val kind = kinds(r.nextInt(kinds.length))
-            val frame =
-              if (r.nextBoolean())
-                s"RANGE BETWEEN ${(1 + r.nextInt(120)) * 60000L} PRECEDING AND CURRENT ROW"
-              else s"ROWS BETWEEN ${1 + r.nextInt(80)} PRECEDING AND CURRENT ROW"
-            s"$kind(value) OVER (PARTITION BY key ORDER BY ts_ms $frame) AS w_$a"
-          }
-          (s"SELECT ts_ms, key, ${aggs.mkString(", ")} FROM $view",
-            "over", true, "append")
-      }
-
-      // ---- source + sink blocks ----------------------------------------
-      val mem =
-        if (srcKind == "Memory") Some(MemoryStream[(Long, String, Double)])
-        else None
-      if (srcKind == "Parquet") {
-        // data first; flush files appended AFTER the query starts
-        rows.toDF("ts_ms", "key", "value").coalesce(1).write.parquet(s"$root/in")
-      }
-      val srcJson =
-        if (srcKind == "Memory") s"""{ "table_name": "$view", "source": { "Memory": {} } }"""
-        else s"""{ "table_name": "$view", "source": { "Parquet": {"path": "$root/in"} } }"""
-      val sinkJson =
-        if (sinkMem) s"""{ "Memory": {"table_name": "$outName", "output_mode": "$outputMode"} }"""
-        else s"""{ "Parquet": {"path": "$root/out"} }"""
-      // complete mode needs the memory sink; parquet sinks are append-only
-      val sink = if (outputMode == "complete")
-        s"""{ "Memory": {"table_name": "$outName", "output_mode": "complete"} }"""
-      else sinkJson
-      val coarseJson =
-        if (withCoarse && needsFlush)
-          s""""operator_overrides": { "defaults": { "tuning": { "Window": {
-              "tiling": { "granularities_ms": [$gran, ${gran * 4}] } } } } },"""
-        else ""
-      val spec = s"""{
-        "execution_mode": "Streaming",
-        "parallelism": $parallelism,
-        $provider
-        $coarseJson
-        "event_time": { "window": {"allowed_lateness_ms": $lateness} },
-        "window": { "tile_granularity_ms": $gran },
-        "sources": [ $srcJson ],
-        "sql": ${graft.Metrics.toJson(sql)},
-        "sink": $sink
-      }"""
-
-      // ---- run streaming, feed out of order, flush, read back ----------
-      val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      val savedState = graft.streaming.StateStoreConf.snapshot(spark)
-      val outcome: Option[String] =
-        try {
-          val tables = mem.map(m => Map(view -> m.toDF().toDF("ts_ms", "key", "value")))
-            .getOrElse(Map.empty[String, DataFrame])
-          val handle = Pipeline.runJson(spark, spec, tables)
-          try {
-            val q = handle.query.get
-            mem match {
-              case Some(m) =>
-                val shuffled = {
-                  val a = scala.collection.mutable.ArrayBuffer(rows: _*)
-                  // Fisher-Yates off the shape's own Random
-                  for (j <- a.indices.reverse.dropRight(1)) {
-                    val k = r.nextInt(j + 1); val t = a(j); a(j) = a(k); a(k) = t
-                  }
-                  a.toSeq
-                }
-                shuffled.grouped(50).foreach { b => m.addData(b: _*); q.processAllAvailable() }
-                if (needsFlush) {
-                  m.addData(keys.map(k => (SlidingWindows.FLUSH_TS, k, 0.0)): _*)
-                  q.processAllAvailable()
-                  m.addData((SlidingWindows.FLUSH_TS, keys.head, 0.0))
-                  q.processAllAvailable()
-                }
-              case None =>
-                q.processAllAvailable()
-                if (needsFlush) {
-                  keys.map(k => (SlidingWindows.FLUSH_TS, k, 0.0))
-                    .toDF("ts_ms", "key", "value")
-                    .coalesce(1).write.mode("append").parquet(s"$root/in")
-                  q.processAllAvailable()
-                  Seq((SlidingWindows.FLUSH_TS, keys.head, 0.0))
-                    .toDF("ts_ms", "key", "value")
-                    .coalesce(1).write.mode("append").parquet(s"$root/in")
-                  q.processAllAvailable()
-                }
-            }
-            val got = collect(
-              if (sink.contains("Memory")) spark.table(outName)
-              else spark.read.parquet(s"$root/out"))
-            // oracle: the same SQL on the same rows, plain Catalyst batch
-            rows.toDF("ts_ms", "key", "value").createOrReplaceTempView(view)
-            val want = collect(spark.sql(sql))
-            rowsEqual(got, want)
-          } finally handle.stop()
-        } catch {
-          case e: Exception =>
-            Some(s"exception: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(300)}")
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-          graft.streaming.StateStoreConf.restore(spark, savedState)
-        }
-
-      shapes(shapeName) = shapes.getOrElse(shapeName, 0) + 1
-      outcome match {
-        case Some(err) =>
-          failures += s"pf_$i (seed=${seedBase + i}, $shapeName, src=$srcKind): $err"
-          println(s"[pfz] FAIL pf_$i seed=${seedBase + i} $shapeName src=$srcKind sink=${if (sinkMem) "mem" else "parquet"}: $err")
-        case None =>
-          if (i % 10 == 0)
-            println(s"[pfz] pf_$i ok  $shapeName src=$srcKind")
-      }
-    }
-
-    writeReport(outJson, "mixed", n, seedBase, shapes, failures.toSeq)
+    val report = run(spark, n, seedBase, family)
+    writeReport(outJson, family, n, seedBase, report.shapes, report.failures)
     spark.stop()
-    if (failures.nonEmpty) sys.exit(2)
+    if (report.failures.nonEmpty) sys.exit(2)
   }
 
   private def writeReport(outJson: String, family: String, n: Int,

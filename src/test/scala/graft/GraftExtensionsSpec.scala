@@ -1,16 +1,64 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.GraftFunctions
 
 /** The `spark.sql.extensions=graft.GraftExtensions` deployment path: a
   * session built from that config alone (no GraftSession bootstrap)
   * must expose the whole SQL function family. Extensions apply at
   * SparkSession CONSTRUCTION, so the spec clears the default/active
   * sessions to force a fresh one over the shared SparkContext, and
-  * restores them after.
+  * restores them after. The programmatic path, `GraftFunctions.register`,
+  * must be idempotent per session.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
+
+  /** Log messages emitted (on any logger) while `body` runs. */
+  private def messagesDuring(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    val capture = new AbstractAppender("graft-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        seen.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    capture.start()
+    root.addAppender(capture)
+    try body
+    finally { root.removeAppender(capture); capture.stop() }
+    seen.asScala.toSeq
+  }
+
+  test("a second register on one session replaces nothing and every function resolves") {
+    val s = SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false").getOrCreate().newSession()
+    GraftFunctions.register(s)
+    val replaced = messagesDuring(GraftFunctions.register(s))
+      .filter(_.contains("replaced a previously registered function"))
+    assert(replaced.isEmpty, s"re-registration replaced ${replaced.size} functions: " +
+      replaced.take(3).mkString("; "))
+    val registry = s.sessionState.functionRegistry
+    GraftFunctions.builders.foreach { case (name, b) =>
+      assert(registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq b),
+        s"$name is not bound to its builder")
+    }
+    val r = s.sql(
+      """SELECT sum_where(x, x > 1), graft_median(x), count_cate(x, c)
+         FROM VALUES (1L, 'a'), (2L, 'b'), (3L, 'a') AS t(x, c)""").head()
+    assert(r.getLong(0) == 5L)
+    assert(r.get(1).toString.toDouble == 2.0)
+    assert(!r.isNullAt(2))
+  }
 
   test("a session configured with the extensions class gets the function family") {
     val savedDefault = SparkSession.getDefaultSession

@@ -81,6 +81,18 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(names(dir).isEmpty)
   }
 
+  test("createAtomic writes into an existing directory and, like the stock manager, refuses a missing one") {
+    val (dir, fm) = fresh()
+    val stock = new FileContextBasedCheckpointFileManager(new Path(dir.toUri), conf)
+    // parent present: the target appears, nothing else
+    write(fm, new Path(dir.resolve("0").toUri), "here".getBytes)
+    assert(names(dir) == Set("0"))
+    // parent missing: both managers fail at create and make no directory
+    intercept[java.io.IOException](fm.createAtomic(new Path(dir.resolve("a/b/1").toUri), true))
+    intercept[java.io.IOException](stock.createAtomic(new Path(dir.resolve("c/d/1").toUri), true))
+    assert(names(dir) == Set("0"))
+  }
+
   test("list never returns in-flight temp files or .crc sidecars") {
     val (dir, fm) = fresh()
     val root = new Path(dir.toUri)
