@@ -11,10 +11,13 @@
 # answer-checked every round, not only in one-off steady-state runs.
 #
 # Usage: scripts/rocksdb_sweep.sh [sfDir] [outJson]
+# With no outJson the record goes to a fresh temporary file (its path is
+# printed last), so a plain run never overwrites a committed record.
 set -euo pipefail
 SF="${1:-/root/testdata/sf0.01}"
-OUT="${2:-/root/repo/ROCKSDB_SWEEP_r17.json}"
-cd /root/repo
+OUT="${2:-$(mktemp /tmp/rocksdb_sweep_XXXX.json)}"
+OUT="$(realpath "$OUT")"
+cd "$(dirname "$(realpath "$0")")/.."
 
 # every SparkEntry catalog entry that runs a streaming query to
 # completion (writeStream / StreamVerify / streamingDedupEntry); batch
@@ -23,17 +26,19 @@ cd /root/repo
 ENTRIES="q_dedup_embedding_streaming,q_dedup_minhash_streaming,q_heavy_hitters_streaming,q_join_stream_static,q_join_stream_stream,q_join_stream_stream_full,q_join_stream_stream_left,q_late_drop,q_sessionize_streaming,q_window_streaming,q_window_streaming_mk,q_window_streaming_ml"
 
 ODIR="$(mktemp -d /tmp/graft_rocksdb_XXXX)"
+CHECK="$(mktemp /tmp/rocksdb_check_XXXX.txt)"
+trap 'rm -f "$CHECK"' EXIT
 SPARK_GRAFT_STATE_PROVIDER=rocksdb \
 SPARK_GRAFT_SSJ_PROVIDER=rocksdb \
 SPARK_GRAFT_SDD_PROVIDER=rocksdb \
 sbt -batch "runMain graft.Verify $SF $ODIR $ENTRIES" 2>&1 | tail -2
-python3 scripts/check.py "$SF" "$ODIR" "$ENTRIES" | tee /tmp/rocksdb_check.txt
+python3 scripts/check.py "$SF" "$ODIR" "$ENTRIES" | tee "$CHECK"
 
-python3 - "$OUT" "$SF" "$ENTRIES" <<'EOF'
+python3 - "$OUT" "$SF" "$ENTRIES" "$CHECK" <<'EOF'
 import json, sys
-out, sf, entries = sys.argv[1], sys.argv[2], sys.argv[3].split(',')
+out, sf, entries, check = sys.argv[1], sys.argv[2], sys.argv[3].split(','), sys.argv[4]
 res = {}
-for line in open('/tmp/rocksdb_check.txt'):
+for line in open(check):
     line = line.strip()
     if line.startswith('PASS '):
         name = line.split()[1]

@@ -51,18 +51,6 @@ import java.util.concurrent.atomic.AtomicLong
   */
 object ShardLog {
 
-  /** Write-path economics counters (JVM-local; in local mode the
-    * executor tasks share the JVM so a measurement tool can read them —
-    * on a real cluster each executor accumulates its own, aggregate via
-    * Spark metrics). bytesAppended counts framed ingest; a compaction
-    * adds its INPUT to bytesCompactRead and its OUTPUT to
-    * bytesCompactWritten — write amplification is
-    * (appended + compactWritten) / appended. */
-  val bytesAppended = new java.util.concurrent.atomic.LongAdder()
-  val bytesCompactRead = new java.util.concurrent.atomic.LongAdder()
-  val bytesCompactWritten = new java.util.concurrent.atomic.LongAdder()
-  val compactions = new java.util.concurrent.atomic.LongAdder()
-
   def shardDir(root: String, shard: Int): Path =
     Paths.get(root, f"shard-$shard%05d")
 
@@ -154,7 +142,6 @@ object ShardLog {
       if (ch.size() > committed) ch.truncate(committed)
       ch.position(ch.size())
       ch.write(ByteBuffer.wrap(framedRecords))
-      bytesAppended.add(framedRecords.length.toLong)
       ch.size()
     } finally ch.close()
     stampLen(dir, logName, size)
@@ -210,9 +197,6 @@ object ShardLog {
     val in = Files.readAllBytes(log)
     val out = rewrite(in)
     if (out != null) {
-      bytesCompactRead.add(in.length.toLong)
-      bytesCompactWritten.add(out.length.toLong)
-      compactions.increment()
       val tmp = dir.resolve(logName + ".tmp")
       Files.write(tmp, out)
       Files.move(tmp, log, java.nio.file.StandardCopyOption.ATOMIC_MOVE,

@@ -367,20 +367,35 @@ object SlidingWindows {
       * frame interiors are covered greedily by the coarsest aligned tiles,
       * so a 30-day window costs tens of tile folds, not tens of
       * thousands. */
-    val tiles: mutable.HashMap[Long, mutable.HashMap[Long, Tile]] = mutable.HashMap.empty
+    val tiles: mutable.LongMap[mutable.LongMap[Tile]] = mutable.LongMap.empty
     var nextSeq: Long = 0L
     /** Highest (ts, seq) already emitted. */
     var emittedTs: Long = Long.MinValue
     var emittedSeq: Long = Long.MinValue
-    /** Diagnostic: tile folds performed by frame evaluation (tests assert
-      * the coarse hierarchy cuts this; never read on the hot path). */
+    /** Diagnostic: tile lookups by frame walks, one per non-empty
+      * interior bucket per distinct frame (tests assert the coarse
+      * hierarchy, the frame grouping and the empty-bucket skip cut this;
+      * never read on the hot path). */
     var tileFolds: Long = 0L
   }
 
-  private[streaming] def insertSorted(st: KeyState, ts: Long, nums: Array[Double],
-                                      strs: Array[String], grans: Seq[Long],
-                                      needs: Needs): Unit =
-    ingestChunk(st, Iterator((ts, nums, strs)), grans, needs)
+  /** Fold one row into its bucket's tile at every granularity — the one
+    * tile update of [[ingestChunk]] and [[StateCodec.decodeKeyState]]. */
+  private[streaming] def foldIntoTiles(st: KeyState, ts: Long, nums: Array[Double],
+                                       strs: Array[String], grans: Array[Long],
+                                       needs: Needs): Unit = {
+    var gi = 0
+    while (gi < grans.length) {
+      val g = grans(gi)
+      var m = st.tiles.getOrNull(g)
+      if (m == null) { m = mutable.LongMap.empty[Tile]; st.tiles.update(g, m) }
+      val b = Math.floorDiv(ts, g) * g
+      var t = m.getOrNull(b)
+      if (t == null) { t = new Tile(needs); m.update(b, t) }
+      t.add(nums, strs)
+      gi += 1
+    }
+  }
 
   /** Ingest a chunk of rows: seqs follow arrival order (so ts ties keep
     * arrival order), tiles fold per row, and the buffer stays (ts, seq)-
@@ -394,14 +409,11 @@ object SlidingWindows {
                                      rows: Iterator[(Long, Array[Double], Array[String])],
                                      grans: Seq[Long], needs: Needs): Unit = {
     val nw = mutable.ArrayBuffer.empty[(Long, Long, Array[Double], Array[String])]
+    val ga = grans.toArray
     rows.foreach { r =>
       val seq = st.nextSeq; st.nextSeq += 1
       nw += ((r._1, seq, r._2, r._3))
-      grans.foreach { g =>
-        st.tiles.getOrElseUpdate(g, mutable.HashMap.empty)
-          .getOrElseUpdate(Math.floorDiv(r._1, g) * g, new Tile(needs))
-          .add(r._2, r._3)
-      }
+      foldIntoTiles(st, r._1, r._2, r._3, ga, needs)
     }
     if (nw.isEmpty) return
     // in-order arrival (the overwhelmingly common case: sources feed
@@ -640,12 +652,46 @@ object SlidingWindows {
       parts.mkString(",")
   }
 
+  /** Fold buffer row `r` into the accumulators `accs(members)`. */
+  @inline private def addRow(accs: Array[Acc], members: Array[Int],
+                             r: (Long, Long, Array[Double], Array[String])): Unit = {
+    var k = 0
+    while (k < members.length) { accs(members(k)).addRow(r._3, r._4); k += 1 }
+  }
+
+  /** First index in [from, until) whose ts is >= `t`, or `until` when
+    * none: gallops from `from`, so an answer d rows on costs O(log d) —
+    * a dense bucket is skipped without a pass over its rows. */
+  private def seekTs(buf: mutable.ArrayBuffer[(Long, Long, Array[Double], Array[String])],
+                     from: Int, until: Int, t: Long): Int = {
+    var lo = from // every index below lo has ts < t
+    var hi = from
+    var step = 1
+    while (hi < until && buf(hi)._1 < t) { lo = hi + 1; hi += step; step <<= 1 }
+    if (hi > until) hi = until
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (buf(mid)._1 < t) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
   /** RANGE frame: tiles over fully-covered interior buckets, raw rows at
     * the two edges. Frame = all buffered rows with ts in [lo, ts(upIdx)] —
     * including same-ts peers after upIdx (SQL RANGE semantics; all peers
-    * <= watermark are buffered before emission). */
-  private def rangeAcc(st: KeyState, lo: Long, upIdx: Int, grans: Seq[Long], a: Acc): Unit = {
-    val gran = grans.head // finest: defines edge resolution
+    * <= watermark are buffered before emission). One walk feeds every
+    * accumulator in `accs(members)` (the specs sharing this frame), each
+    * the same rows and tiles in the same order.
+    *
+    * The interior walk looks a bucket up only when a buffered row falls in
+    * it, and stops once no buffered row is left below the current row's
+    * bucket. That is exact: a tile exists only where a buffered row falls
+    * (tiles fold each ingested row and rebuild from the buffer on decode,
+    * and the prune horizon lies below every interior bucket — see
+    * [[StateCodec]]), so an empty bucket has no tile to fold. */
+  private def rangeAcc(st: KeyState, lo: Long, upIdx: Int, grans: Array[Long],
+                       accs: Array[Acc], members: Array[Int]): Unit = {
+    val gran = grans(0) // finest: defines edge resolution
     val buf = st.buffer
     val hiTs = buf(upIdx)._1
     // include peers: last index with ts == hiTs
@@ -657,24 +703,25 @@ object SlidingWindows {
       val mid = (s + e) >>> 1
       if (buf(mid)._1 < lo) s = mid + 1 else e = mid
     }
-    val startIdx = s
+    var i = s
     // interior tile span: buckets fully inside [lo, current bucket)
     val firstFull = Math.floorDiv(lo + gran - 1, gran) * gran // first bucket start >= lo
     val lastFullEnd = Math.floorDiv(hiTs, gran) * gran        // current row's bucket start
     if (lastFullEnd - firstFull >= gran) {
       // raw edge before the first full bucket
-      var i = startIdx
-      while (i <= endIdx && buf(i)._1 < firstFull) { a.addRow(buf(i)._3, buf(i)._4); i += 1 }
-      // tiles over [firstFull, lastFullEnd): greedy coarsest-aligned walk
-      // (a missing tile means no rows in that span — still advance).
-      // Runs once PER EMITTED ROW: no Option/closure/reverse allocation,
-      // and the gran -> tile-map resolution is cached across buckets
-      // (consecutive buckets overwhelmingly share a step)
+      while (i <= endIdx && buf(i)._1 < firstFull) { addRow(accs, members, buf(i)); i += 1 }
+      // tiles over [firstFull, lastFullEnd): greedy coarsest-aligned walk,
+      // `i` the first buffered row not yet covered. Runs once PER EMITTED
+      // ROW and frame: no Option/closure allocation, and the gran ->
+      // tile-map resolution is cached across buckets (consecutive buckets
+      // overwhelmingly share a step)
       val nG = grans.length
       var lastStep = -1L
-      var lastMap: mutable.HashMap[Long, Tile] = null
+      var lastMap: mutable.LongMap[Tile] = null
       var b = firstFull
-      while (b < lastFullEnd) {
+      while (i <= endIdx && buf(i)._1 < lastFullEnd) {
+        // one granularity: every bucket is a step, so go straight to row i's
+        if (nG == 1) b = math.max(b, Math.floorDiv(buf(i)._1, gran) * gran)
         var step = gran
         var gi = nG - 1
         var found = false
@@ -683,32 +730,42 @@ object SlidingWindows {
           if (b % g == 0 && b + g <= lastFullEnd) { step = g; found = true }
           gi -= 1
         }
-        if (step != lastStep) {
-          lastStep = step
-          lastMap = st.tiles.getOrElse(step, null)
+        val bEnd = b + step
+        if (buf(i)._1 < bEnd) {
+          if (step != lastStep) {
+            lastStep = step
+            lastMap = st.tiles.getOrNull(step)
+          }
+          if (lastMap != null) {
+            val t = lastMap.getOrNull(b)
+            if (t != null) {
+              var k = 0
+              while (k < members.length) { accs(members(k)).addTile(t); k += 1 }
+            }
+          }
+          st.tileFolds += 1
+          i = seekTs(buf, i, endIdx + 1, bEnd)
         }
-        if (lastMap != null) {
-          val t = lastMap.getOrElse(b, null)
-          if (t != null) a.addTile(t)
-        }
-        st.tileFolds += 1
-        b += step
+        b = bEnd
       }
-      // raw edge: current bucket rows up to the peer end
-      var k2 = endIdx
-      while (k2 >= startIdx && buf(k2)._1 >= lastFullEnd) k2 -= 1
-      var k3 = k2 + 1
-      while (k3 <= endIdx) { a.addRow(buf(k3)._3, buf(k3)._4); k3 += 1 }
-    } else {
-      var i = startIdx
-      while (i <= endIdx) { a.addRow(buf(i)._3, buf(i)._4); i += 1 }
     }
+    // raw rows left: the current bucket up to the peer end (or, for a
+    // frame with no full bucket, the whole frame)
+    while (i <= endIdx) { addRow(accs, members, buf(i)); i += 1 }
+  }
+
+  /** Fold the frame ending at buffer row `upIdx` into `accs(members)`. */
+  private def foldFrame(st: KeyState, frame: Frame, upIdx: Int, grans: Array[Long],
+                        accs: Array[Acc], members: Array[Int]): Unit = frame match {
+    case RangeMs(len) => rangeAcc(st, st.buffer(upIdx)._1 - len, upIdx, grans, accs, members)
+    case RowsN(n) =>
+      val buf = st.buffer
+      var i = math.max(0, upIdx - n)
+      while (i <= upIdx) { addRow(accs, members, buf(i)); i += 1 }
   }
 
   /** The (cateIdx, maskedIdx, ratioIdx) triple a spec's accumulator reads
-    * its shared-payload slots through — a pure function of (spec, needs),
-    * so emit loops hoist it out of the per-row path via [[specIdxOf]] +
-    * [[evalSpecIdx]] instead of re-deriving it for every emitted row. */
+    * its shared-payload slots through — a pure function of (spec, needs). */
   private[streaming] def specIdxOf(spec: AggSpec, needs: Needs): (Int, Int, Int) = {
     val cateIdx =
       if (isCate(spec.kind))
@@ -726,32 +783,34 @@ object SlidingWindows {
     (cateIdx, maskedIdx, ratioIdx)
   }
 
-  private[streaming] def evalSpecIdx(st: KeyState, spec: AggSpec, upIdx: Int,
-                                     grans: Seq[Long], needs: Needs,
-                                     idx: (Int, Int, Int)): Any = {
-    val a = new Acc(spec, idx._1, idx._2, idx._3)
-    spec.frame match {
-      case RangeMs(len) => rangeAcc(st, st.buffer(upIdx)._1 - len, upIdx, grans, a)
-      case RowsN(n) =>
-        val buf = st.buffer
-        var i = math.max(0, upIdx - n)
-        while (i <= upIdx) { a.addRow(buf(i)._3, buf(i)._4); i += 1 }
-    }
+  /** A query's per-row fold plan, computed once per query and read by
+    * every emitted row: each spec's payload-slot indices ([[specIdxOf]]),
+    * the specs grouped by frame (so each distinct frame is walked once per
+    * row and feeds every spec on it) and the tile granularities unboxed. */
+  private[streaming] final class FoldPlan(val specs: Array[AggSpec], needs: Needs,
+                                          tileGrans: Seq[Long]) extends Serializable {
+    val grans: Array[Long] = tileGrans.toArray
+    val specIdx: Array[(Int, Int, Int)] = specs.map(specIdxOf(_, needs))
+    /** (frame, indices of the specs on it), frames in first-appearance order. */
+    val groups: Array[(Frame, Array[Int])] =
+      specs.map(_.frame).distinct.map(f => (f, specs.indices.filter(specs(_).frame == f).toArray))
+  }
+
+  /** One spec's value at buffer row `upIdx` — a one-spec frame group. */
+  private[streaming] def evalSpec(st: KeyState, spec: AggSpec, upIdx: Int,
+                                  grans: Seq[Long], needs: Needs): Any = {
+    val x = specIdxOf(spec, needs)
+    val a = new Acc(spec, x._1, x._2, x._3)
+    foldFrame(st, spec.frame, upIdx, grans.toArray, Array(a), Array(0))
     finish(spec, a)
   }
 
-  private[streaming] def evalSpec(st: KeyState, spec: AggSpec, upIdx: Int,
-                                  grans: Seq[Long], needs: Needs): Any =
-    evalSpecIdx(st, spec, upIdx, grans, needs, specIdxOf(spec, needs))
-
   /** Output row for buffer row `i`: (ts, key, numeric slots, string slots,
     * one value per spec) as ONE flat values array — the shared emit step
-    * of the streaming engine and the batch sweep. `specIdx` is
-    * [[specIdxOf]] per spec, hoisted out of the per-row loop. */
-  private[streaming] def emitRow(st: KeyState, i: Int, key: String, specs: Array[AggSpec],
-                                 specIdx: Array[(Int, Int, Int)], grans: Seq[Long],
-                                 needs: Needs): Row = {
+    * of the streaming engine and the batch sweep. */
+  private[streaming] def emitRow(st: KeyState, i: Int, key: String, plan: FoldPlan): Row = {
     val (ts, _, nums, strs) = st.buffer(i)
+    val specs = plan.specs
     val vals = new Array[Any](2 + nums.length + strs.length + specs.length)
     vals(0) = ts; vals(1) = key
     var c = 2
@@ -759,12 +818,59 @@ object SlidingWindows {
     while (k < nums.length) { vals(c) = nums(k); c += 1; k += 1 }
     k = 0
     while (k < strs.length) { vals(c) = strs(k); c += 1; k += 1 }
+    val accs = new Array[Acc](specs.length)
     k = 0
     while (k < specs.length) {
-      vals(c) = evalSpecIdx(st, specs(k), i, grans, needs, specIdx(k))
-      c += 1; k += 1
+      val x = plan.specIdx(k)
+      accs(k) = new Acc(specs(k), x._1, x._2, x._3)
+      k += 1
     }
+    k = 0
+    while (k < plan.groups.length) {
+      val (frame, members) = plan.groups(k)
+      foldFrame(st, frame, i, plan.grans, accs, members)
+      k += 1
+    }
+    k = 0
+    while (k < specs.length) { vals(c) = finish(specs(k), accs(k)); c += 1; k += 1 }
     new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
+  }
+
+  /** Emit every buffered row past the emitted position with ts <= `wm`,
+    * in (ts, seq) order, into `out`; returns the index of the first row
+    * left unemitted. */
+  private[streaming] def emitReady(st: KeyState, key: String, wm: Long, plan: FoldPlan,
+                                   out: mutable.ArrayBuffer[Row]): Int = {
+    val buf = st.buffer
+    var i = 0
+    // skip already-emitted prefix
+    while (i < buf.length && ordLeq(buf(i)._1, buf(i)._2, st.emittedTs, st.emittedSeq)) i += 1
+    while (i < buf.length && buf(i)._1 <= wm) {
+      out += emitRow(st, i, key, plan)
+      st.emittedTs = buf(i)._1; st.emittedSeq = buf(i)._2
+      i += 1
+    }
+    i
+  }
+
+  /** Drop the emitted prefix no future frame can reference — a row is
+    * droppable only if it fails BOTH the RANGE horizon (ts < emittedTs -
+    * maxRangeMs) and the ROWS lookback (more than maxRows before
+    * `unemitted`, the first unemitted row) — and the tiles wholly below
+    * the horizon. */
+  private[streaming] def pruneEmitted(st: KeyState, unemitted: Int, maxRangeMs: Long,
+                                      maxRows: Int): Unit = {
+    val buf = st.buffer
+    val tsHorizon = st.emittedTs - maxRangeMs
+    var tsOk = 0
+    while (tsOk < buf.length && buf(tsOk)._1 < tsHorizon) tsOk += 1
+    val dropTo = math.min(tsOk, math.max(0, unemitted - maxRows))
+    if (dropTo > 0) {
+      buf.remove(0, dropTo)
+      st.tiles.foreach { case (g, m) =>
+        m.filterInPlace { case (b, _) => b + g > tsHorizon }
+      }
+    }
   }
 
   /** Evaluate `specs` at a virtual point `atTs` over ONE key's rows — the
@@ -884,11 +990,7 @@ object SlidingWindows {
 
     val prepared = prepareMulti(df, keyCol, tsMsCol, valueCols, strCols,
       latenessMs, watermark = true)
-    // per-spec payload-slot indices: pure (spec, needs) metadata, hoisted
-    // out of the per-emitted-row loop (specs.map(evalSpec) re-derived
-    // them 20k times per trigger on the bench workload)
-    val specArr = specs.toArray
-    val specIdx = specArr.map(specIdxOf(_, needs))
+    val plan = new FoldPlan(specs.toArray, needs, grans)
 
     import prepared.sparkSession.implicits._
     val grouped = prepared
@@ -908,38 +1010,15 @@ object SlidingWindows {
           (r._1, r._3.toArray, r._4.toArray)
       }, grans, needs)
       val t2 = System.nanoTime()
-      // advance: emit every buffered row with ts <= wm not yet emitted
       val out = mutable.ArrayBuffer.empty[Row]
-      val buf = st.buffer
-      var i = 0
-      // skip already-emitted prefix
-      while (i < buf.length && ordLeq(buf(i)._1, buf(i)._2, st.emittedTs, st.emittedSeq)) i += 1
-      while (i < buf.length && buf(i)._1 <= wm) {
-        out += emitRow(st, i, key, specArr, specIdx, grans, needs)
-        st.emittedTs = buf(i)._1; st.emittedSeq = buf(i)._2
-        i += 1
-      }
+      val unemitted = emitReady(st, key, wm, plan, out)
       val t3 = System.nanoTime()
-      // prune: drop the emitted prefix no future frame can reference —
-      // a row is droppable only if it fails BOTH the RANGE horizon
-      // (ts < emittedTs - maxRange) and the ROWS lookback (more than
-      // maxRows before the first unemitted row).
-      locally {
-        val tsHorizon = st.emittedTs - maxRangeMs
-        var tsOk = 0
-        while (tsOk < buf.length && buf(tsOk)._1 < tsHorizon) tsOk += 1
-        val dropTo = math.min(tsOk, math.max(0, i - maxRows))
-        if (dropTo > 0) {
-          buf.remove(0, dropTo)
-          st.tiles.foreach { case (g, m) =>
-            m.filterInPlace { case (b, _) => b + g > tsHorizon }
-          }
-        }
-      }
+      pruneEmitted(st, unemitted, maxRangeMs, maxRows)
       state.update(StateCodec.encodeKeyState(st))
       EngineProfile.add(t1 - t0, t2 - t1, t3 - t2,
         System.nanoTime() - t3, out.length)
       // wake up when the watermark reaches the earliest unemitted row
+      val buf = st.buffer
       var j = 0
       while (j < buf.length && ordLeq(buf(j)._1, buf(j)._2, st.emittedTs, st.emittedSeq)) j += 1
       if (j < buf.length) state.setTimeoutTimestamp(math.max(buf(j)._1, wm + 1))
@@ -988,8 +1067,7 @@ object SlidingWindows {
 
     val prepared = prepareMulti(df, keyCol, tsMsCol, valueCols, strCols,
       latenessMs = 0, watermark = false)
-    val specArr = specs.toArray
-    val specIdx = specArr.map(specIdxOf(_, needs))
+    val plan = new FoldPlan(specs.toArray, needs, grans)
 
     import prepared.sparkSession.implicits._
     prepared.as[(Long, String, Seq[Double], Seq[String])]
@@ -998,7 +1076,7 @@ object SlidingWindows {
         val st = new KeyState
         ingestChunk(st, rows.map(r => (r._1, r._3.toArray, r._4.toArray)), grans, needs)
         Iterator.range(0, st.buffer.length)
-          .map(emitRow(st, _, key, specArr, specIdx, grans, needs))
+          .map(emitRow(st, _, key, plan))
       }(outEnc)
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import graft.streaming.SlidingWindows.{KeyState, Needs, Tile}
+import graft.streaming.SlidingWindows.{KeyState, Needs}
 
 /** Hand-rolled binary codec for engine state — the state-store hot path.
   * Every touched key re-serializes its state value once per trigger, so
@@ -15,7 +15,9 @@ import graft.streaming.SlidingWindows.{KeyState, Needs, Tile}
   * halves the bytes and is pruning-safe — the frame evaluator's interior
   * walk only ever folds tiles over buckets fully above the prune horizon
   * (partially-pruned buckets are re-read row-by-row at the frame edge,
-  * rangeAcc), and rebuilt tiles cover exactly the retained rows.
+  * rangeAcc), and rebuilt tiles cover exactly the retained rows. So an
+  * interior bucket has a tile exactly when a retained row falls in it,
+  * which lets the walk skip buckets no buffered row falls in.
   *
   * Row layout: ts i64 | seq i64 | nNum f64s | nStr strings
   * (-1 = null, else UTF-8 length + bytes).
@@ -71,15 +73,12 @@ object StateCodec {
     val st = new KeyState
     st.nextSeq = in.readLong(); st.emittedTs = in.readLong(); st.emittedSeq = in.readLong()
     val n = in.readInt()
+    val ga = grans.toArray
     var i = 0
     while (i < n) {
       val r = readRow(in, needs.nNum, needs.nStr)
       st.buffer += r
-      grans.foreach { g =>
-        st.tiles.getOrElseUpdate(g, scala.collection.mutable.HashMap.empty)
-          .getOrElseUpdate(Math.floorDiv(r._1, g) * g, new Tile(needs))
-          .add(r._3, r._4)
-      }
+      SlidingWindows.foldIntoTiles(st, r._1, r._3, r._4, ga, needs)
       i += 1
     }
     st
