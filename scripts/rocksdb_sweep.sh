@@ -6,7 +6,8 @@
 # provider crossover in BENCH_spill_r15.json) says a real deployment runs
 # RocksDB. This sweep re-runs every catalog entry that starts a real
 # streaming query with the RocksDB provider forced globally
-# (SPARK_GRAFT_STATE_PROVIDER + the two per-entry provider knobs) and
+# (SPARK_GRAFT_STATE_PROVIDER, read by Verify for the session and by the
+# entries that set their own provider) and
 # replays the same DuckDB value compare, so the scale-path provider is
 # answer-checked every round, not only in one-off steady-state runs.
 #
@@ -29,8 +30,6 @@ ODIR="$(mktemp -d /tmp/graft_rocksdb_XXXX)"
 CHECK="$(mktemp /tmp/rocksdb_check_XXXX.txt)"
 trap 'rm -f "$CHECK"' EXIT
 SPARK_GRAFT_STATE_PROVIDER=rocksdb \
-SPARK_GRAFT_SSJ_PROVIDER=rocksdb \
-SPARK_GRAFT_SDD_PROVIDER=rocksdb \
 sbt -batch "runMain graft.Verify $SF $ODIR $ENTRIES" 2>&1 | tail -2
 python3 scripts/check.py "$SF" "$ODIR" "$ENTRIES" | tee "$CHECK"
 
@@ -50,8 +49,8 @@ missing = [e for e in entries if e not in res]
 doc = {
   'tool': 'scripts/rocksdb_sweep.sh (graft.Verify + scripts/check.py)',
   'what': ('streaming catalog entries re-run with the RocksDB state-store '
-           'provider forced globally (SPARK_GRAFT_STATE_PROVIDER=rocksdb + '
-           'the SSJ/SDD per-entry knobs), value-compared against the same '
+           'provider forced globally (SPARK_GRAFT_STATE_PROVIDER=rocksdb), '
+           'value-compared against the same '
            'DuckDB oracles as the default-provider gate'),
   'sf_dir': sf,
   'provider': 'RocksDBStateStoreProvider (changelog checkpointing on, '

@@ -71,13 +71,27 @@ object SparkEntry {
   private def evQ(sql: String): Q =
     split(sql.replace("__EV__", eventsMsSpark), sql.replace("__EV__", eventsMsDuck))
 
-  /** The q_ts_profile_sim profile fold, shared with Bench.tspsAttribution
-    * so the published attribution can never drift from the entry it
-    * measures. */
-  private[graft] val tspsProfSql: String =
+  /** The q_ts_profile_sim profile fold. */
+  private val tspsProfSql: String =
     s"""SELECT user_id, (ts_ms DIV 86400000) % 8 AS b,
         CAST(sum(value_c) AS BIGINT) AS v
         FROM $eventsMsSpark GROUP BY user_id, 2"""
+
+  /** State partitions for the streaming entries that set their own:
+    * every state store pays a fixed commit/maintenance cost per trigger
+    * whatever its row count (measured r6 at sf0.1 on the stream-stream
+    * join: addBatch 8.6 s at 32 partitions vs 2.4 s at 4, same 59k state
+    * rows), so the session default of 32 buys hundreds of store commits
+    * for a few thousand state rows. 8 carries every entry's state volume
+    * with headroom. */
+  private val StateParts = "8"
+
+  /** `SPARK_GRAFT_STATE_PROVIDER=rocksdb` (scripts/rocksdb_sweep.sh, which
+    * also sets it session-wide through Verify) reaches the entries that
+    * set the provider inside their own `StateStoreConf.withSaved`: the
+    * inner stream-stream join and the streaming dedups. */
+  private def rocksDbForced: Boolean =
+    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb")
 
   private lazy val catalog: Map[String, Q] = {
 
@@ -881,40 +895,25 @@ object SparkEntry {
           .write.parquet(s"$root/l")
         ev.where("event_type = 'error'").select("event_id", "user_id", "ts_ms", "value_c")
           .write.parquet(s"$root/r")
-        // experiment knobs (bench attribution, default = pinned shape):
-        // provider hdfs|rocksdb, maxFilesPerTrigger spreads the input
-        // across watermark-advancing triggers so state evicts mid-run
-        val provider = sys.env.getOrElse("SPARK_GRAFT_SSJ_PROVIDER", "hdfs")
-        val maxFiles = sys.env.get("SPARK_GRAFT_SSJ_MAX_FILES").map(_.toInt)
-        // state partition count: a stream-stream join materializes 4 state
-        // stores per shuffle partition, and EVERY one pays a fixed
-        // commit/maintenance cost per trigger regardless of its row count
-        // (measured r6 at sf0.1: addBatch 8.6 s at 32 partitions vs 2.4 s
-        // at 4, same 59k state rows — 256 store-commits of ~65 ms fixed
-        // cost WAS r5's unattributed 9.5-vs-4.1 s swing, modulated by
-        // machine load). 8 partitions carry this workload's state volume
-        // with headroom; production sizes this to state volume / cluster
-        // cores, so the env knob stays.
-        val ssParts = sys.env.get("SPARK_GRAFT_SSJ_PARTS").map(_.toInt).getOrElse(8)
-        // conf mutations wrapped from the set onward (ADVICE/VERDICT r19):
+        // state partitions: a stream-stream join materializes 4 state
+        // stores per shuffle partition, each with its fixed per-trigger
+        // commit cost (256 store commits of ~65 ms at 32 partitions WAS
+        // r5's unattributed 9.5-vs-4.1 s swing) — see StateParts.
+        // Conf mutations wrapped from the set onward (ADVICE/VERDICT r19):
         // a throw during stream build/start/stop used to leak the 8-part
-        // conf (and the provider override) into every later entry
-        GraftSession.withShuffleParts(s, ssParts.toString) {
+        // conf (and the provider override) into every later entry. The
+        // provider is set explicitly either way: an earlier pipeline run
+        // can leave RocksDB on the session.
+        GraftSession.withShuffleParts(s, StateParts) {
         graft.streaming.StateStoreConf.withSaved(s) {
-        if (provider == "rocksdb")
-          s.conf.set(graft.streaming.StateStoreConf.ProviderKey,
-            graft.streaming.StateStoreConf.RocksDbProvider)
-        else
-          s.conf.set(graft.streaming.StateStoreConf.ProviderKey,
-            graft.streaming.StateStoreConf.HdfsProvider)
-        def side(sub: String): DataFrame = {
-          val st = s.read.parquet(s"$root/$sub").schema
-          val rd = s.readStream.schema(st)
-          val rd2 = maxFiles.fold(rd)(n => rd.option("maxFilesPerTrigger", n))
-          rd2.parquet(s"$root/$sub")
+        s.conf.set(graft.streaming.StateStoreConf.ProviderKey,
+          if (rocksDbForced) graft.streaming.StateStoreConf.RocksDbProvider
+          else graft.streaming.StateStoreConf.HdfsProvider)
+        def side(sub: String): DataFrame =
+          s.readStream.schema(s.read.parquet(s"$root/$sub").schema)
+            .parquet(s"$root/$sub")
             .withColumn("ts", timestamp_millis(col("ts_ms")))
             .withWatermark("ts", "1 hour")
-        }
         val l = side("l").withColumn("bkt",
           expr("explode(array(ts_ms DIV 86400000 - 1, ts_ms DIV 86400000))"))
         val r = side("r").withColumn("bkt", expr("ts_ms DIV 86400000"))
@@ -928,22 +927,6 @@ object SparkEntry {
           .option("path", s"$root/out").option("checkpointLocation", s"$root/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
         try q.processAllAvailable() finally q.stop()
-        // attribution: state rows/memory and per-trigger commit cost land in
-        // stderr so bench runs record WHY the number is what it is
-        val progs = q.recentProgress
-        val st = progs.flatMap(_.stateOperators).toSeq
-        val ssjLine =
-          s"[ssj] provider=$provider maxFiles=${maxFiles.getOrElse(-1)} " +
-            s"triggers=${progs.length} " +
-            s"stateRowsTotal=${if (st.nonEmpty) st.map(_.numRowsTotal).max else -1} " +
-            s"stateRowsUpdated=${st.map(_.numRowsUpdated).sum} " +
-            s"commitMsSum=${progs.map(p => Option(p.durationMs.get("commitOffsets")).map(_.longValue).getOrElse(0L)).sum} " +
-            s"addBatchMsSum=${progs.map(p => Option(p.durationMs.get("addBatch")).map(_.longValue).getOrElse(0L)).sum}"
-        System.err.println(ssjLine)
-        // also into the bench summary JSON — stderr tails get clipped
-        graft.BenchCounters.put("ssj", ssjLine)
-        if (sys.env.contains("SPARK_GRAFT_SSJ_DEBUG"))
-          progs.foreach(p => System.err.println(s"[ssj-trigger] ${p.json}"))
         s.read.parquet(s"$root/out").orderBy("event_id", "e_event_id")
         }
         }
@@ -985,7 +968,7 @@ object SparkEntry {
         sentinel("event_id" -> lit(-1L), "user_id" -> lit(-1L),
             "ts_ms" -> lit(maxTs + 172800000L), "value_c" -> lit(0L))
           .write.mode("append").parquet(s"$root/r")
-        GraftSession.withShuffleParts(s, "8") {
+        GraftSession.withShuffleParts(s, StateParts) {
         def side(sub: String): DataFrame =
           s.readStream.schema(s.read.parquet(s"$root/$sub").schema)
             .parquet(s"$root/$sub")
@@ -1041,7 +1024,7 @@ object SparkEntry {
         sentinel("event_id" -> lit(-1L), "user_id" -> lit(-1L),
             "ts_ms" -> lit(maxTs + 172800000L), "value_c" -> lit(0L))
           .write.mode("append").parquet(s"$root/r")
-        GraftSession.withShuffleParts(s, "8") {
+        GraftSession.withShuffleParts(s, StateParts) {
         def side(sub: String): DataFrame =
           s.readStream.schema(s.read.parquet(s"$root/$sub").schema)
             .parquet(s"$root/$sub")
@@ -1456,11 +1439,8 @@ object SparkEntry {
         // and this entry runs ~6 triggers (initial + 2 sentinel rounds +
         // fallbacks), so at the session default of 32 it paid ~192 store
         // commits for ~7k session rows (r19 on a slow-commit box: 7.0 s at
-        // 32 parts vs 3.5 s at 8). 8 carries this state volume with
-        // headroom; production sizes this to state volume / cluster cores,
-        // so the env knob stays.
-        GraftSession.withShuffleParts(s,
-          sys.env.getOrElse("SPARK_GRAFT_SW_PARTS", "8")) {
+        // 32 parts vs 3.5 s at 8).
+        GraftSession.withShuffleParts(s, StateParts) {
         val stream = s.readStream.schema(s.read.parquet(s"$root/in").schema)
           .parquet(s"$root/in")
           .withColumn("ts", timestamp_millis(col("ts_ms")))
@@ -1596,10 +1576,8 @@ object SparkEntry {
         // at the session default of 32 every trigger paid 32 fixed-cost
         // store commits (the r6 stream-stream-join attribution — commit
         // cost is per store instance, not per row; r19 on a slow-commit
-        // box: 12-18 s at 32 parts vs ~4 s at 8). Production sizes this
-        // to state volume / cluster cores — hence the env knob.
-        GraftSession.withShuffleParts(s,
-          sys.env.getOrElse("SPARK_GRAFT_LATE_PARTS", "8")) {
+        // box: 12-18 s at 32 parts vs ~4 s at 8).
+        GraftSession.withShuffleParts(s, StateParts) {
         val stream = s.readStream.schema(s.read.parquet(s"$root/in").schema)
           .parquet(s"$root/in")
           .withColumn("ts", timestamp_millis(col("ts_ms")))
@@ -3000,10 +2978,8 @@ object SparkEntry {
           .groupBy("i", "bucket").agg(fcount(flit(1)).as("cell"))
         // 64 state rows total (4 x 16 CMS cells): the per-store fixed
         // commit cost dominates at the 32-partition session default (the
-        // r6 attribution); 8 stores carry this sketch with headroom and
-        // the env knob sizes it for real deployments
-        GraftSession.withShuffleParts(s,
-          sys.env.getOrElse("SPARK_GRAFT_CMS_PARTS", "8")) {
+        // r6 attribution)
+        GraftSession.withShuffleParts(s, StateParts) {
           val q = cells.writeStream.outputMode("complete").format("memory")
             .queryName("cms_cells")
             .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
@@ -3153,19 +3129,16 @@ object SparkEntry {
         // a throw during stream build/start/stop used to leak the 8-part
         // conf (and the provider override) into every later entry. All
         // THREE state-store confs restore, not just the provider (r13
-        // nit): the env knob sets them here.
-        GraftSession.withShuffleParts(s,
-          sys.env.getOrElse("SPARK_GRAFT_SDD_PARTS", "8")) {
+        // nit): setRocksDb sets them all.
+        GraftSession.withShuffleParts(s, StateParts) {
         graft.streaming.StateStoreConf.withSaved(s) {
-        // state-store provider knob (r13): the HDFS-backed default
-        // measures fastest at catalog state volumes (sf0.1 steady: 18.4
-        // vs 20.8 s), RocksDB overtakes once the store outgrows cheap
-        // in-heap maps (100x steady: 450 vs 665 s wall, per-trigger
-        // flatness 1.37 vs 1.99 — BENCH_steady_r13.json). A 100 TB
-        // deployment sets rocksdb; the committed bench series keeps the
-        // small-corpus optimum.
-        if (sys.env.get("SPARK_GRAFT_SDD_PROVIDER").contains("rocksdb"))
-          graft.streaming.StateStoreConf.setRocksDb(s)
+        // state-store provider (r13): the HDFS-backed default measures
+        // fastest at catalog state volumes (sf0.1 steady: 18.4 vs 20.8 s),
+        // RocksDB overtakes once the store outgrows cheap in-heap maps
+        // (100x steady: 450 vs 665 s wall, per-trigger flatness 1.37 vs
+        // 1.99 — BENCH_steady_r13.json). A 100 TB deployment sets rocksdb;
+        // the committed bench series keeps the small-corpus optimum.
+        if (rocksDbForced) graft.streaming.StateStoreConf.setRocksDb(s)
         val q = pairs(stream).writeStream.outputMode("append").format("parquet")
           .option("path", s"$root/out").option("checkpointLocation", s"$root/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()

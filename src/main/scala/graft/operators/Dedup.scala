@@ -16,9 +16,10 @@ import scala.concurrent.duration.{DurationInt, FiniteDuration}
   * skew-join handles hot buckets, and every hash is computed from fixed
   * seeds so results are reproducible across runs/clusters.
   *
-  * Signature computation is the linear-cost hot path, so it is structured
-  * for whole-stage codegen: shingles/tokens are exploded ONCE and the
-  * MinHash/SimHash signatures computed as N independent codegen'd
+  * Signature computation is the linear-cost hot path, so it runs in
+  * generated code: a MinHash signature is one generated shingles-x-hashes
+  * loop per row ([[graft.functions.ArrayMath.minhashSig]]), and SimHash
+  * tokens are exploded ONCE and folded as N independent codegen'd
   * aggregate columns in a single hash-aggregate pass — not as per-row
   * interpreted higher-order array expressions.
   *
@@ -191,8 +192,8 @@ object Dedup {
     * column (array of `numHashes` longs): same shingle positions
     * (`sequence(1, greatest(len-k+1, 1))` — short texts hash their whole
     * tail), same md5-prefix shingle hash (incl. the mod-P fold), same LCG
-    * mins as the explode+aggregate pass — [[graft.streaming.StreamingDedup]]'s
-    * spec pins the bit-equality. The mins come from one generated
+    * mins as the oracle's explode+aggregate SQL ([[DedupOracles]]) —
+    * [[graft.streaming.StreamingDedup]]'s spec pins the bit-equality. The mins come from one generated
     * shingles-x-hashes loop ([[graft.functions.ArrayMath.minhashSig]]).
     */
   def signatureCol(textCol: String, k: Int, numHashes: Int): Column = {
@@ -206,39 +207,16 @@ object Dedup {
     * the id so every downstream branch (band keys, both re-attach joins)
     * reuses ONE materialized exchange instead of recomputing the narrow
     * kernel per branch. Shuffle payload: one 1 KB signature per doc,
-    * versus the explode+aggregate pass's one row PER SHINGLE (~10-20x
+    * versus one row PER SHINGLE for an explode+aggregate pass (~10-20x
     * more bytes for typical documents) — the signature itself computes in
     * the generated loop at scan parallelism, zero pre-shuffle.
     */
-  private def minhashSigsRowWise(df: DataFrame, idCol: String,
-                                 textCol: String, k: Int,
-                                 numHashes: Int): DataFrame =
+  private def minhashSigs(df: DataFrame, idCol: String, textCol: String,
+                          k: Int, numHashes: Int): DataFrame =
     spread(df.select(col(idCol).as("__id"), col(textCol).as("__t")), workFactor = 8)
       .where(col("__t").isNotNull)
       .select(col("__id"), signatureCol("__t", k, numHashes).as("__sig"))
       .repartition(col("__id"))
-
-  /** MinHash signatures as one codegen'd hash-aggregate pass: numHashes
-    * min() columns over the exploded shingle rows (plus any extra aggs),
-    * packed into one `__sig` array column. Every downstream consumer
-    * (band keys, both signature re-attach joins) derives from this ONE
-    * frame, so their aggregate subplans canonicalize identically and
-    * Spark's exchange reuse runs the expensive pass once per query.
-    * [[minhashSigsRowWise]] is the smaller-shuffle default for document
-    * corpora; this pass remains for inputs where a single giant text
-    * must rebalance across cores (its explode splits the per-shingle
-    * work), and for callers that shingle differently (ngram dedup).
-    */
-  private def minhashSigs(sh: DataFrame, numHashes: Int,
-                          extra: Seq[(Column, String)] = Nil): DataFrame = {
-    val aggs = minhashCoeffs(numHashes).zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("__x") + lit(b)) % P31).as(s"m$i")
-    } ++ extra.map { case (c, n) => c.as(n) }
-    sh.groupBy("__id").agg(aggs.head, aggs.tail: _*)
-      .select(col("__id") +:
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("__sig") +:
-        extra.map { case (_, n) => col(n) }: _*)
-  }
 
   /** (id, band, bandKey) rows: the signature array sliced into `bands`
     * keys, each the comma-join of its rowsPerBand values (engine-portable
@@ -329,9 +307,9 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Intermediate frames of the MinHash pipeline, exposed for the bench's
-    * stage-cardinality attribution (same contract as FuzzyJoin.Stages —
-    * counting the REAL stages, not a drift-prone copy). */
+  /** Intermediate frames of the MinHash pipeline, exposed so a harness
+    * can count the REAL stages (perfbench's curation leg counts `cands`),
+    * not a drift-prone copy. */
   private[graft] final case class MinhashStages(
       sig: DataFrame, banded: DataFrame,
       candsRaw: DataFrame, cands: DataFrame, accepted: DataFrame)
@@ -341,13 +319,7 @@ object Dedup {
                                    threshold: Double = 0.8,
                                    maxBucket: Int = DefaultMaxBucket): MinhashStages = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    // row-wise kernel by default (one signature per doc through the
-    // shuffle); SPARK_GRAFT_MINHASH_EXPLODE=1 selects the explode+agg
-    // pass (giant-single-document rebalancing)
-    val sig =
-      if (sys.env.contains("SPARK_GRAFT_MINHASH_EXPLODE"))
-        minhashSigs(shingleRows(df, idCol, textCol, k), numHashes)
-      else minhashSigsRowWise(df, idCol, textCol, k, numHashes)
+    val sig = minhashSigs(df, idCol, textCol, k, numHashes)
     val banded = bandRows(sig, numHashes, bands)
     val candsRaw = candidatePairsRaw(banded, maxBucket, "minhash")
     val cands = candsRaw.distinct()
@@ -542,30 +514,22 @@ object Dedup {
     // that the band keys, both signature re-attaches AND both set
     // re-attaches all reuse. Replaces explode -> distinct -> groupBy-agg
     // + collect_set (two wide shuffles of per-gram rows) with one shuffle
-    // of (id, sig, set) rows. SPARK_GRAFT_MINHASH_EXPLODE=1 restores the
-    // exploded pass (giant-single-document rebalancing; same knob as
-    // minhashAccepted).
-    val (sig, sets) =
-      if (sys.env.contains("SPARK_GRAFT_MINHASH_EXPLODE")) {
-        val shd = shingleRows(df, idCol, textCol, k).distinct()
-        (minhashSigs(shd, numHashes),
-          shd.groupBy("__id").agg(collect_set(col("__x")).as("__set")))
-      } else {
-        val grams = expr(
-          s"transform(sequence(1, greatest(length(__t) - ${k - 1}, 1)), " +
-            s"i -> CAST(conv(substring(md5(substring(__t, i, $k)), 1, 8), 16, 10) AS BIGINT) % $P31)")
-        val coeffs = minhashCoeffs(numHashes)
-        val base = spread(df.select(col(idCol).as("__id"), col(textCol).as("__t")),
-            workFactor = 8)
-          .where(col("__t").isNotNull)
-          .withColumn("__grams", grams)
-          .select(col("__id"),
-            graft.functions.ArrayMath.minhashSig(col("__grams"),
-              coeffs.map(_._1), coeffs.map(_._2), P31).as("__sig"),
-            array_distinct(col("__grams")).as("__set"))
-          .repartition(col("__id"))
-        (base.select("__id", "__sig"), base.select("__id", "__set"))
-      }
+    // of (id, sig, set) rows.
+    val grams = expr(
+      s"transform(sequence(1, greatest(length(__t) - ${k - 1}, 1)), " +
+        s"i -> CAST(conv(substring(md5(substring(__t, i, $k)), 1, 8), 16, 10) AS BIGINT) % $P31)")
+    val coeffs = minhashCoeffs(numHashes)
+    val base = spread(df.select(col(idCol).as("__id"), col(textCol).as("__t")),
+        workFactor = 8)
+      .where(col("__t").isNotNull)
+      .withColumn("__grams", grams)
+      .select(col("__id"),
+        graft.functions.ArrayMath.minhashSig(col("__grams"),
+          coeffs.map(_._1), coeffs.map(_._2), P31).as("__sig"),
+        array_distinct(col("__grams")).as("__set"))
+      .repartition(col("__id"))
+    val sig = base.select("__id", "__sig")
+    val sets = base.select("__id", "__set")
     val eq = aggregate(
       zip_with(col("__lsig"), col("__rsig"), (a, b) => when(a === b, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x)

@@ -33,7 +33,8 @@ object DedupOracles {
        |  FROM (SELECT doc_id, text, unnest(range(1, greatest(length(text) - ${k - 1}, 1) + 1)) AS u
        |        FROM documents))""".stripMargin
 
-  /** MinHash signature columns m0..m{n-1} — twin of Dedup.minhashSigs. */
+  /** MinHash signature columns m0..m{n-1} — the same mins as
+    * Dedup.signatureCol's per-row loop, as one aggregate over `sh`. */
   private def sigCte(n: Int): String = {
     val mins = Dedup.minhashCoeffs(n).zipWithIndex.map { case ((a, b), i) =>
       s"min(($a * x + $b) % $P) AS m$i"

@@ -256,14 +256,8 @@ object FuzzyJoin {
     val width =
       if (blockWidth > 0) blockWidth
       else if (confWidth > 0) confWidth
-      else {
-        val st = chooseWidth(l, r, num, den, occ,
-          Some((left.count(), right.count())))
-        graft.BenchCounters.put("fuzzy_width",
-          s"w=${st.width} vocab=${st.vocab} f1=${st.f1.toLong} " +
-            f"f2=${st.f2}%.0f nl=${st.nl} nr=${st.nr}")
-        st.width
-      }
+      else chooseWidth(l, r, num, den, occ,
+        Some((left.count(), right.count()))).width
 
     // global gram rarity over BOTH tables: the one total order every
     // prefix derives from (read from the cached aggregate)

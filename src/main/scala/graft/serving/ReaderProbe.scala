@@ -11,34 +11,22 @@ import java.nio.file.{Files, Paths}
   * here the channel is shared storage instead of a socket).
   *
   * Forked by CrossJvmServingSpec via `java -cp` while the parent JVM's
-  * Spark job concurrently upserts and compacts the same shard root; also
-  * reusable as a standalone read node for horizontal-scaling
-  * measurements (mode `qps`).
+  * Spark job concurrently upserts and compacts the same shard root.
   *
-  * Modes (args):
-  *  - `check <root> <numShards> <nKeys>`: loop lookups over keys
-  *    `k0..k{nKeys-1}` until `<root>/stop` exists, verifying the LWW
-  *    contract the writer encodes: feature `f == ts*10 + keyIndex`, and
-  *    a key's observed ts never goes backwards (upserts only advance
-  *    event time). Emits one JSON line on stdout:
-  *    `{"lookups":N,"hits":N,"violations":N,"value_violations":N,
-  *      "gen":G,"final_ts":{"k0":T,...}}` — the parent asserts zero
-  *    violations, ≥1 observed compaction gen, and final ts == the last
-  *    batch it wrote.
-  *  - `qps <root> <numShards> <nKeys> <millis> <keyPrefix> [shardLo
-  *    shardHi]`: time a lookup loop over keys `<keyPrefix>0..` —
-  *    optionally only those routed to shards in [lo,hi), i.e. a node
-  *    serving a shard subset — and emit `{"lookups":N,"qps":Q}`.
+  * Args: `check <root> <numShards> <nKeys>`: loop lookups over keys
+  * `k0..k{nKeys-1}` until `<root>/stop` exists, verifying the LWW
+  * contract the writer encodes: feature `f == ts*10 + keyIndex`, and
+  * a key's observed ts never goes backwards (upserts only advance
+  * event time). Emits one JSON line on stdout:
+  * `{"lookups":N,"hits":N,"violations":N,"value_violations":N,
+  *   "gen":G,"final_ts":{"k0":T,...}}` — the parent asserts zero
+  * violations, ≥1 observed compaction gen, and final ts == the last
+  * batch it wrote.
   */
 object ReaderProbe {
 
   def main(args: Array[String]): Unit = args(0) match {
     case "check" => check(args(1), args(2).toInt, args(3).toInt)
-    case "qps" =>
-      val (lo, hi) =
-        if (args.length > 7) (args(6).toInt, args(7).toInt)
-        else (0, args(2).toInt)
-      qps(args(1), args(2).toInt, args(3).toInt, args(4).toLong, args(5), lo, hi)
     case other => sys.error(s"unknown mode $other")
   }
 
@@ -70,27 +58,6 @@ object ReaderProbe {
     println(s"""{"lookups":$lookups,"hits":$hits,"violations":$violations,""" +
       s""""value_violations":$valueViolations,"gen":${gens.max},""" +
       s""""final_ts":{$finalTs}}""")
-  }
-
-  private def qps(root: String, numShards: Int, nKeys: Int, millis: Long,
-                  keyPrefix: String, shardLo: Int, shardHi: Int): Unit = {
-    val store = new ShardedFeatureStore(root, numShards)
-    val keys = (0 until nKeys).map(i => s"$keyPrefix$i")
-      .filter { k =>
-        val s = ShardedFeatureStore.shardOf(k, numShards)
-        s >= shardLo && s < shardHi
-      }
-    // warm the offset index so the measurement is the lookup path, not
-    // the first full-log parse
-    keys.foreach(store.get)
-    var lookups = 0L
-    val t0 = System.nanoTime()
-    val deadline = t0 + millis * 1000000L
-    while (System.nanoTime() < deadline) {
-      keys.foreach { k => store.get(k); lookups += 1 }
-    }
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"lookups":$lookups,"qps":${lookups / sec}%.1f}""")
   }
 
   /** Write the stop marker `check` mode polls for. */

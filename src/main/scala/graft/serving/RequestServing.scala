@@ -44,8 +44,7 @@ object RequestServing {
     * unbounded semantics. */
   def boundedAsOf(df: DataFrame, keyCol: String, tsMsCol: String,
                   specs: Seq[AggSpec], atTs: Long,
-                  bucketMs: Long = 86400000L,
-                  countingPass: Boolean = true): DataFrame = {
+                  bucketMs: Long = 86400000L): DataFrame = {
     val ts = col(tsMsCol)
     val hasRows = specs.exists(_.frame.isInstanceOf[RowsN])
     val hasRange = specs.exists(_.frame.isInstanceOf[RangeMs])
@@ -55,9 +54,6 @@ object RequestServing {
       .foldLeft(0)(math.max)
     val upTo = df.where(ts <= atTs)
     if (!hasRows) return upTo.where(ts >= atTs - maxRange)
-    // knob for benchmarking the counting pass's cost against its scan
-    // bound: without it, ROWS frames read each key's full (<= atTs) history
-    if (!countingPass) return upTo
     val rangeFloor = if (hasRange) atTs - maxRange else Long.MaxValue
     val counts = upTo.groupBy(col(keyCol),
         expr(s"($tsMsCol DIV $bucketMs) * $bucketMs").as("__bucket"))
@@ -81,14 +77,12 @@ object RequestServing {
     *         paths agree on the same lookup); count stays LONG.
     */
   def pointInTime(df: DataFrame, keyCol: String, tsMsCol: String,
-                  valueCol: String, specs: Seq[AggSpec], atTs: Long,
-                  countingPass: Boolean = true): DataFrame = {
+                  valueCol: String, specs: Seq[AggSpec], atTs: Long): DataFrame = {
     val ts = col(tsMsCol)
     val v = col(valueCol)
     val hasRows = specs.exists(_.frame.isInstanceOf[RowsN])
 
-    val base = boundedAsOf(df, keyCol, tsMsCol, specs, atTs,
-      countingPass = countingPass)
+    val base = boundedAsOf(df, keyCol, tsMsCol, specs, atTs)
     // Recency rank per key, only when some ROWS frame needs it.
     val ranked =
       if (hasRows)

@@ -327,6 +327,28 @@ class SectionStampSpec extends AnyFunSuite with Retries {
     } finally java.util.Locale.setDefault(prev)
   }
 
+  test("per-query lines are valid JSON under a comma-decimal locale, names escaped") {
+    // an f"%.3f" interpolation under de_DE prints "s":1234,567 — invalid
+    // JSON; a raw quote or newline in the name breaks the line the same way
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val name = "q_\"odd\"\nname"
+      val plain = mapper.readTree(Bench.queryLine(name, 1234.567))
+      assert(plain.get("q").asText == name)
+      assert(plain.get("s").asDouble == 1234.567)
+      assert(!plain.has("outlier_first"))
+      val line = Bench.queryLine(name, 2.5, Some((9.125, 2.5)))
+      assert(!line.contains("\n"), line)
+      val out = mapper.readTree(line)
+      assert(out.get("q").asText == name)
+      assert(out.get("s").asDouble == 2.5)
+      assert(out.get("outlier_first").asDouble == 9.125)
+      assert(out.get("outlier_retry").asDouble == 2.5)
+    } finally java.util.Locale.setDefault(prev)
+  }
+
   test("stamp fires end-to-end from a REAL synthetic load on one boundary",
       Retryable) {
     // same preconditions as MachineHealthSpec: skip on a box that is
