@@ -74,7 +74,7 @@ object Bench {
         "value" -> Datagen.Uniform(0.0, 100.0)))
       .select(col("ts_ms").cast("long"), col("key"), col("value"))
     input.coalesce(1).write.parquet(inDir)
-    SlidingWindows.flushRows(input, "key", "ts_ms", "value")
+    SlidingWindows.flushRowsMulti(input, "key", "ts_ms", Seq("value"), Nil)
       .write.mode("append").parquet(inDir)
     // schema inference is input setup, not engine work — outside the clock
     val inSchema = spark.read.parquet(inDir).schema
@@ -87,8 +87,8 @@ object Bench {
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     val streamIn = spark.readStream.schema(inSchema)
       .parquet(inDir) // no maxFilesPerTrigger: all files in one batch
-    val out = SlidingWindows.streaming(streamIn, "key", "ts_ms", "value",
-      Seq(AggSpec("sum_1s", "sum", RangeMs(1000))), latenessMs = 0,
+    val out = SlidingWindows.streamingMulti(streamIn, "key", "ts_ms", Seq("value"),
+      Nil, Seq(AggSpec("sum_1s", "sum", RangeMs(1000))), latenessMs = 0,
       tileGranularityMs = 250)
     val emitted = new java.util.concurrent.atomic.AtomicLong(0)
     val q = out.writeStream.outputMode("append")
@@ -100,7 +100,7 @@ object Bench {
       q.processAllAvailable()
       var rounds = 0
       while (emitted.get() < records && rounds < 5) {
-        SlidingWindows.flushRows(input, "key", "ts_ms", "value")
+        SlidingWindows.flushRowsMulti(input, "key", "ts_ms", Seq("value"), Nil)
           .write.mode("append").parquet(inDir)
         q.processAllAvailable()
         rounds += 1
@@ -333,7 +333,7 @@ object Bench {
                   col("ts_ms") < startMs + (i + 1) * chunkSpan)
         .coalesce(1).write.mode("append").parquet(inDir)
     }
-    SlidingWindows.flushRows(input, "key", "ts_ms", "value")
+    SlidingWindows.flushRowsMulti(input, "key", "ts_ms", Seq("value"), Nil)
       .write.mode("append").parquet(inDir)
 
     val t0 = System.nanoTime()
@@ -344,8 +344,8 @@ object Bench {
     val streamIn = spark.readStream.schema(spark.read.parquet(inDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     // lateness = one batch span, absorbing file mod-time ties
-    val out = SlidingWindows.streaming(streamIn, "key", "ts_ms", "value",
-      Seq(AggSpec("sum_1s", "sum", RangeMs(1000))), latenessMs = chunkSpan,
+    val out = SlidingWindows.streamingMulti(streamIn, "key", "ts_ms", Seq("value"),
+      Nil, Seq(AggSpec("sum_1s", "sum", RangeMs(1000))), latenessMs = chunkSpan,
       tileGranularityMs = 250)
     // counting sink — the reference measures records/s through the
     // operator into its in-memory sink, not a durable file sink.
@@ -384,7 +384,7 @@ object Bench {
       q.processAllAvailable()
       var rounds = 0
       while (emitted.get() < records && rounds < 5) {
-        SlidingWindows.flushRows(input, "key", "ts_ms", "value")
+        SlidingWindows.flushRowsMulti(input, "key", "ts_ms", Seq("value"), Nil)
           .write.mode("append").parquet(inDir)
         q.processAllAvailable()
         rounds += 1

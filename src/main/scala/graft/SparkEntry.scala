@@ -1653,7 +1653,7 @@ object SparkEntry {
           """SELECT ts DIV 1000000 AS ts_ms, CAST(user_id AS STRING) AS key,
                     CAST(CAST(round(value * 100) AS BIGINT) AS DOUBLE) AS value
              FROM events""")
-        StreamVerify.runBounded(s, ev, "key", "ts_ms", "value",
+        StreamVerify.runBoundedMulti(s, ev, "key", "ts_ms", Seq("value"), Nil,
             Seq(AggSpec("sum_1h_c", "sum", RangeMs(3600000)),
                 AggSpec("cnt_1h", "count", RangeMs(3600000))),
             latenessMs = 0, tileGranularityMs = 600000)
@@ -2017,7 +2017,7 @@ object SparkEntry {
         ORDER BY ts_ms, uid, etype, value"""))
 
     // Same semantics as q_top_window, evaluated through the tiled per-key
-    // engine sweep (SlidingWindows.batchCompute) instead of WindowExec —
+    // engine sweep (SlidingWindows.batchComputeMulti) instead of WindowExec —
     // the scale path for ML aggregates over long frames: O(buckets + edge)
     // per row instead of rebuilding the aggregation buffer per output row.
     m += "q_top_window_tiled" -> Q(
@@ -2029,7 +2029,7 @@ object SparkEntry {
         val ev = s.sql(
           """SELECT ts DIV 1000000 AS ts_ms, CAST(user_id AS STRING) AS key, value
              FROM events""")
-        SlidingWindows.batchCompute(ev, "key", "ts_ms", "value",
+        SlidingWindows.batchComputeMulti(ev, "key", "ts_ms", Seq("value"), Nil,
             Seq(AggSpec("top_1h", "top", RangeMs(3600000), 3)),
             tileGranularityMs = 600000)
           .orderBy("ts_ms", "key", "value")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.functions.GraftFunctions
-import graft.serving.{FeatureLookup, FeatureStore, LiveBuffer, RequestServer, ServingBuffer, ShardedFeatureStore, ShardedServingBuffer}
+import graft.serving.{FeatureLookup, FeatureStore, LiveBuffer, RequestServer, ShardedFeatureStore, ShardedServingBuffer}
 import graft.sources.{Datagen, Kafka}
 import graft.streaming.{LocalCheckpointFileManager, SlidingWindows, StateStoreConf}
 import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
@@ -31,14 +31,9 @@ import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
   *                                                // measured policy knob;
   *                                                // window pipelines default
   *                                                // to rocksdb
-  *   "trigger_ms": 1000,              // optional: explicit trigger cadence
-  *   "freshness_target_ms": 2400,     // optional (r15): target p50
-  *                                    // event→emit freshness; derives the
-  *                                    // trigger interval (target/2, floored
-  *                                    // at the measured knee — see
-  *                                    // [[Pipeline.specTrigger]])
-  *   "trigger_floor_ms": 600,         // optional: a deployment's own
-  *                                    // measured per-trigger fixed floor
+  *   "trigger_ms": 1000,              // optional: processing-time trigger
+  *                                    // interval; absent = 0 (next
+  *                                    // micro-batch as soon as one ends)
   *   "sources": [ { "table_name": "events",
   *                  "schema_json": {"fields":[{"name":"v","type":{"name":"utf8"}}]},
   *                  "event_time_column": "ts",       // optional, streaming
@@ -58,7 +53,10 @@ import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
   *               "tile_granularity_ms": 60000,
   *               "aggs": [ {"name": "sum_1h", "kind": "sum", "range_ms": 3600000},
   *                          {"name": "avg_100", "kind": "avg", "rows": 100} ] },
-  *   "request_source_sink": { "bind_address": "127.0.0.1:0" },
+  *   "request_source_sink": { "bind_address": "127.0.0.1:0",
+  *                            "sharded": {"num_shards": 8,   // optional,
+  *                                        "root": "..."} },  // defaults shown;
+  *                                                           // root: a temp dir
   *   "sink": { "Parquet": {"path": "..."} }
   *         | { "Memory": {"table_name": "out"} }
   *         | { "Upsert": {"key_column": "key", "ts_column": "ts_ms"} } }
@@ -68,11 +66,15 @@ import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
   *  - Batch: sources read eagerly, `sql` runs on Catalyst, sink written.
   *  - Streaming: sources as readStream (+ per-source watermark), `sql`
   *    runs as a streaming query into the sink.
-  *  - Request: the declared `window` block runs through the sliding-window
-  *    engine into an Upsert [[FeatureStore]], and an HTTP [[RequestServer]]
-  *    serves keyed lookups — the reference's request-mode graph rewrite
-  *    (src/api/logical_graph.rs:362-494: window branch cloned into
-  *    request_source -> window_request -> request_sink).
+  *  - Request: the declared `window` block (or `sql`) runs through the
+  *    sliding-window engine into a [[ShardedFeatureStore]], its raw rows
+  *    feed a [[ShardedServingBuffer]], and an HTTP [[RequestServer]] with a
+  *    [[graft.serving.RequestCoalescer]] serves keyed lookups — the
+  *    reference's request-mode graph rewrite (src/api/logical_graph.rs:
+  *    362-494: window branch cloned into request_source -> window_request
+  *    -> request_sink), its state sharded by key as RequestRoute shards it.
+  *
+  * Fields that are gone fail at parse time ([[Pipeline.removedFields]]).
   */
 object Pipeline {
 
@@ -109,10 +111,9 @@ object Pipeline {
   def runJson(spark: SparkSession, json: String,
               tables: Map[String, DataFrame] = Map.empty): Handle = {
     val spec = mapper.readTree(json)
-    if (spec.has("engine"))
-      sys.error("the \"engine\" field is gone: windows have one engine now " +
-        "(flatMapGroupsWithState); drop the field, and pick the state store " +
-        "with \"state_store_provider\"")
+    removedFields.foreach { case (name, present, hint) =>
+      if (present(spec)) sys.error(s"the \"$name\" field is gone: $hint")
+    }
     val mode = text(spec, "execution_mode", "Batch")
     GraftFunctions.register(spark)
 
@@ -146,10 +147,7 @@ object Pipeline {
       * the HDFS-backed store the request-serving tail under concurrent
       * writes measured about a fifth higher (perfbench `serve_live`). */
     def windowStateStore(): Unit = if (!providerGiven) StateStoreConf.setRocksDb(spark)
-    val overrideNodes: Seq[JsonNode] = opt(spec, "operator_overrides").toSeq.flatMap { oo =>
-      opt(oo, "defaults").toSeq ++
-        opt(oo, "per_operator").toSeq.flatMap(_.properties().asScala.map(_.getValue))
-    }
+    val overrideNodes = overridesOf(spec)
     overrideNodes.foreach { o =>
       opt(o, "transport").foreach(t => System.err.println(
         s"[pipeline] ignoring transport override $t (Spark exchange owns buffering)"))
@@ -160,20 +158,6 @@ object Pipeline {
             s"[pipeline] ignoring window tuning $k=$v (state store owns dump/compaction)")))
       }
     }
-    // fuzzy-join blocking width (r14 product knob): forces the ladder
-    // rung for auto-mode jaccardJoin calls in this SESSION, skipping the
-    // gram-stats pass (FuzzyJoin.WidthConfKey; 0/absent = measured
-    // auto-selection). Session-scoped, so conflicting per-operator widths
-    // cannot be honored — fail loudly instead of silently last-one-wins.
-    val fuzzyWidths = overrideNodes
-      .flatMap(o => opt(o, "tuning").flatMap(t => opt(t, "Fuzzy")))
-      .flatMap(f => opt(f, "block_width")).map(_.asInt()).distinct
-    if (fuzzyWidths.length > 1)
-      sys.error(s"conflicting Fuzzy.block_width overrides $fuzzyWidths: " +
-        "the width knob is session-scoped — give all fuzzy operators the " +
-        "same width, or pass blockWidth per jaccardJoin call")
-    fuzzyWidths.headOption.foreach(bw =>
-      spark.conf.set(graft.operators.FuzzyJoin.WidthConfKey, bw.toString))
     val windowTuning: Option[JsonNode] =
       overrideNodes.flatMap(o => opt(o, "tuning").flatMap(t => opt(t, "Window"))).headOption
     val tilingGrans: Seq[Long] = windowTuning.flatMap(w => opt(w, "tiling"))
@@ -282,8 +266,8 @@ object Pipeline {
               c.runWith(windowSrcs(c), latenessMs, gran,
                 coarseTilesMs = tilingGrans.drop(1), prebuiltPlan = Some(plan)),
               c.keyCol, c.tsCol,
-              liveFeed = Some(LiveFeed(plan.keyed, plan.engineKey, c.tsCol,
-                plan.numCols, plan.strCols, plan.specs)))
+              LiveFeed(plan.keyed, plan.engineKey, c.tsCol,
+                plan.numCols, plan.strCols, plan.specs))
           case None =>
             val win = opt(spec, "window")
               .getOrElse(sys.error("Request pipeline needs sql or a window block"))
@@ -364,39 +348,11 @@ object Pipeline {
 
   // -- sinks --------------------------------------------------------------
 
-  /** Trigger cadence from the spec (r15 product knob): explicit
-    * `trigger_ms`, or DERIVED from `freshness_target_ms` via the measured
-    * policy in README "Scale notes" — p50 event→emit freshness ≈ 2
-    * trigger periods, so `trigger = target / 2`, floored at the knee
-    * interval 2 × the per-trigger fixed floor (measured ~0.55-0.6 s on
-    * this harness; a deployment that measured its own floor overrides it
-    * with `trigger_floor_ms`). Below the knee an interval buys ~5%
-    * freshness for ~4× throughput (`BENCH_steady_r14_sweep*.json`), so an
-    * unachievable target warns and runs at the knee instead of silently
-    * thrashing. Neither field: ProcessingTime(0), the as-fast-as-possible
-    * harness default.
-    */
-  private[graft] def specTrigger(spec: JsonNode): Trigger = {
-    val explicit = opt(spec, "trigger_ms").map(_.asLong())
-    val target = opt(spec, "freshness_target_ms").map(_.asLong())
-    if (explicit.nonEmpty && target.nonEmpty)
-      sys.error("give either trigger_ms or freshness_target_ms, not both " +
-        "(freshness_target_ms derives the trigger interval)")
-    val floorMs = opt(spec, "trigger_floor_ms").map(_.asLong()).getOrElse(600L)
-    val ms = explicit.orElse(target.map { f =>
-      require(f > 0, s"freshness_target_ms must be > 0, got $f")
-      val knee = 2L * floorMs
-      val derived = f / 2
-      if (derived < knee) {
-        System.err.println(s"[pipeline] freshness_target_ms=$f is below the " +
-          s"efficient envelope (~${4 * floorMs} ms p50 at trigger_floor_ms=" +
-          s"$floorMs): running at the knee interval $knee ms — re-measure " +
-          "the floor or relax the target")
-        knee
-      } else derived
-    }).getOrElse(0L)
-    Trigger.ProcessingTime(ms)
-  }
+  /** Trigger cadence: `trigger_ms` as a processing-time interval, the
+    * plain setting Structured Streaming itself offers; absent,
+    * ProcessingTime(0) starts the next micro-batch as soon as one ends. */
+  private[graft] def specTrigger(spec: JsonNode): Trigger =
+    Trigger.ProcessingTime(opt(spec, "trigger_ms").map(_.asLong()).getOrElse(0L))
 
   private def runBatchSink(spark: SparkSession, spec: JsonNode, df: DataFrame): Handle = {
     sinkKind(spec) match {
@@ -470,92 +426,95 @@ object Pipeline {
       AggSpec(name, kind, frame, opt(a, "n").map(_.asInt()).getOrElse(0),
         cIdx = 0)
     }
-    val out = SlidingWindows.streaming(src, keyCol, tsCol, valueCol, specs,
-      latenessMs, gran, cateCol = cateCol, coarseTilesMs = coarse)
-    // live request evaluation reads raw rows keyed/slotted exactly as the
-    // engine wrapper slots them (value -> slot 0, cate -> string slot 0)
+    // one raw frame, slotted as the engine reads it (value -> slot 0,
+    // cate -> string slot 0), feeds both the window query and the live
+    // buffer
+    val strCols = if (cateCol != null) Seq("cate") else Nil
     val raw = src.select(Seq(col(tsCol).cast("long").as("ts_ms"),
       col(keyCol).cast("string").as("key"),
       col(valueCol).cast("double").as("value")) ++
       (if (cateCol != null) Seq(col(cateCol).cast("string").as("cate")) else Nil): _*)
+    val out = SlidingWindows.streamingMulti(raw, "key", "ts_ms", Seq("value"),
+      strCols, specs, latenessMs, gran, coarse)
     startRequestServing(spec, out, "key", "ts_ms",
-      liveFeed = Some(LiveFeed(raw, "key", "ts_ms", Seq("value"),
-        if (cateCol != null) Seq("cate") else Nil, specs)))
+      LiveFeed(raw, "key", "ts_ms", Seq("value"), strCols, specs))
   }
 
-  /** Serving tail shared by both request-mode variants. `liveFeed` wires
-    * the reference's request-path semantics: the RAW input rows (frame,
-    * value-slot columns, string-slot columns, specs) stream into a
-    * [[ServingBuffer]] through a second query, and each `POST /request`
-    * re-evaluates the aggregates at the request's timestamp instead of
-    * serving the last upserted row (window_request_operator.rs:90-300).
-    * The upsert store stays as the fallback for keys with no buffer. */
+  /** Serving tail shared by both request-mode variants, sharded by key
+    * as the reference's RequestRoute shards window state: the window
+    * query upserts per-shard logs of a [[ShardedFeatureStore]], and the
+    * RAW input rows stream through a second query into the per-shard row
+    * logs of a [[ShardedServingBuffer]]. Each `POST /request` re-evaluates
+    * the aggregates at the request's timestamp from the buffer instead of
+    * serving the last upserted row (window_request_operator.rs:90-300);
+    * the store is the fallback for keys with no buffered rows. Concurrent
+    * lookups drain into one evaluation pass through the server's
+    * [[graft.serving.RequestCoalescer]] (request_source.rs:38-49).
+    * `request_source_sink.sharded` only places the logs: `root` (default
+    * a temp dir) and `num_shards` (default 8). */
   private def startRequestServing(spec: JsonNode, out: DataFrame,
                                   keyCol: String, tsCol: String,
-                                  liveFeed: Option[LiveFeed] = None): Handle = {
-    // `request_source_sink.sharded: {"num_shards": N[, "root": dir]}`
-    // switches the serving tail to the SCALE path: executor-written
-    // per-shard logs for both the upsert store and the live row buffer
-    // (the reference's RequestRoute-sharded serving state), instead of
-    // the driver-memory maps.
-    val shardedCfg = opt(spec, "request_source_sink").flatMap(r => opt(r, "sharded"))
-    val shardRoot = shardedCfg.map(cfg =>
-      text(cfg, "root", graft.GraftSession.tempDir("graft_pipeline_shard_")))
+                                  lf: LiveFeed): Handle = {
+    val rss = opt(spec, "request_source_sink")
+    val shardedCfg = rss.flatMap(r => opt(r, "sharded"))
+    val root = shardedCfg.flatMap(cfg => opt(cfg, "root")).map(_.asText())
+      .getOrElse(graft.GraftSession.tempDir("graft_pipeline_shard_"))
     val numShards = shardedCfg.flatMap(cfg => opt(cfg, "num_shards"))
       .map(_.asInt()).getOrElse(8)
 
-    val (store: FeatureLookup,
-         upsertFn: ((DataFrame, Long) => Unit)) = shardRoot match {
-      case Some(root) =>
-        (new ShardedFeatureStore(s"$root/store", numShards),
-          ShardedFeatureStore.upsertBatch(s"$root/store", numShards, keyCol, tsCol) _)
-      case None =>
-        val s = new FeatureStore
-        (s, FeatureStore.upsertBatch(s, keyCol, tsCol) _)
-    }
+    val store = new ShardedFeatureStore(s"$root/store", numShards)
     val q = out.writeStream.outputMode("append")
       .trigger(specTrigger(spec))
-      .foreachBatch(upsertFn)
+      .foreachBatch(ShardedFeatureStore.upsertBatch(s"$root/store", numShards,
+        keyCol, tsCol) _)
       .start()
-    val (buffer, feeder) = liveFeed match {
-      case Some(lf) =>
-        val (buf: LiveBuffer, feedFn: ((DataFrame, Long) => Unit)) = shardRoot match {
-          case Some(root) =>
-            (new ShardedServingBuffer(s"$root/live", numShards, lf.specs),
-              ShardedServingBuffer.feedBatch(s"$root/live", numShards,
-                lf.rawKeyCol, lf.rawTsCol, lf.valueCols, lf.strCols, lf.specs) _)
-          case None =>
-            val b = new ServingBuffer(lf.specs)
-            (b, ServingBuffer.feedBatch(b, lf.rawKeyCol, lf.rawTsCol,
-              lf.valueCols, lf.strCols) _)
-        }
-        val fq = lf.raw.writeStream.outputMode("append")
-          .trigger(specTrigger(spec))
-          .foreachBatch(feedFn)
-          .start()
-        (Some(buf), Some(fq))
-      case None => (None, None)
-    }
-    val bind = opt(spec, "request_source_sink")
-      .map(r => text(r, "bind_address", "127.0.0.1:0")).getOrElse("127.0.0.1:0")
-    val port0 = bind.split(':').last.toInt
-    // `request_source_sink.coalesce: true` turns on cold-key micro-burst
-    // coalescing (the reference drains all pending requests into one
-    // RecordBatch, request_source.rs:38-49); hot-key lookups are already
-    // amortized by the ServingBuffer memo either way
-    val coalesce = opt(spec, "request_source_sink")
-      .flatMap(r => opt(r, "coalesce")).exists(_.asBoolean(false))
-    val server = new RequestServer(store, port0, buffer, coalesce = coalesce)
+    val buffer = new ShardedServingBuffer(s"$root/live", numShards, lf.specs)
+    val feeder = lf.raw.writeStream.outputMode("append")
+      .trigger(specTrigger(spec))
+      .foreachBatch(ShardedServingBuffer.feedBatch(s"$root/live", numShards,
+        lf.rawKeyCol, lf.rawTsCol, lf.valueCols, lf.strCols, lf.specs) _)
+      .start()
+    val bind = rss.map(r => text(r, "bind_address", "127.0.0.1:0"))
+      .getOrElse("127.0.0.1:0")
+    val server = new RequestServer(store, bind.split(':').last.toInt, Some(buffer))
     val port = server.start()
     Handle("Request", None, Some(q), Some(store), Some(server), Some(port),
-      feeder, buffer)
+      Some(feeder), Some(buffer))
   }
+
+  /** Spec fields that are gone: (name, present in a spec, what to do
+    * instead). A spec carrying one fails before any source loads or query
+    * starts. `request_source_sink.coalesce: true` is still accepted. */
+  private val removedFields: Seq[(String, JsonNode => Boolean, String)] = Seq(
+    ("engine", _.has("engine"),
+      "windows have one engine now (flatMapGroupsWithState); drop the " +
+        "field, and pick the state store with \"state_store_provider\""),
+    ("freshness_target_ms", _.has("freshness_target_ms"),
+      "set the trigger interval with \"trigger_ms\""),
+    ("trigger_floor_ms", _.has("trigger_floor_ms"),
+      "set the trigger interval with \"trigger_ms\""),
+    ("request_source_sink.coalesce", s => opt(s, "request_source_sink")
+        .flatMap(r => opt(r, "coalesce")).exists(c => !c.asBoolean(false)),
+      "request serving always coalesces; drop the field"),
+    ("tuning.Fuzzy.block_width", s => overridesOf(s).exists(o =>
+        opt(o, "tuning").flatMap(t => opt(t, "Fuzzy"))
+          .flatMap(f => opt(f, "block_width")).isDefined),
+      "no pipeline spec runs a fuzzy join; pass blockWidth to " +
+        "FuzzyJoin.jaccardJoin"))
 
   // -- helpers ------------------------------------------------------------
 
   private def sinkKind(spec: JsonNode): Option[(String, JsonNode)] =
     opt(spec, "sink").flatMap(s => s.properties().asScala.headOption
       .map(e => e.getKey -> e.getValue))
+
+  /** The `operator_overrides` blocks: `defaults` and each `per_operator`
+    * entry. */
+  private def overridesOf(spec: JsonNode): Seq[JsonNode] =
+    opt(spec, "operator_overrides").toSeq.flatMap { oo =>
+      opt(oo, "defaults").toSeq ++
+        opt(oo, "per_operator").toSeq.flatMap(_.properties().asScala.map(_.getValue))
+    }
 
   private def opt(n: JsonNode, field: String): Option[JsonNode] =
     Option(n.get(field)).filterNot(_.isNull)

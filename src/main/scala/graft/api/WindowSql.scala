@@ -100,14 +100,6 @@ object WindowSql {
         s"single partition column required here, got ${many.mkString(", ")}")
     }
 
-    /** Single-source compatibility entry. */
-    def run(src: DataFrame, latenessMs: Long = 0,
-            tileGranularityMs: Long = 60000L,
-            useBatchSweep: Boolean = false,
-            coarseTilesMs: Seq[Long] = Nil): DataFrame =
-      runWith(Map(relations.head.table -> src), latenessMs, tileGranularityMs,
-        useBatchSweep, coarseTilesMs)
-
     /** Run the compiled windows through the engine. `srcs` maps each FROM
       * relation to its frame; in streaming mode the FIRST relation is the
       * stream and the others must be static frames (stream-static join —

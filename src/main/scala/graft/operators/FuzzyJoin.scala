@@ -78,11 +78,6 @@ object FuzzyJoin {
   private val OccCacheSlots = 4
   private val occCache = new java.util.ArrayDeque[DataFrame](OccCacheSlots)
 
-  /** Session conf that forces the blocking-key width for auto-mode calls
-    * (0/absent = measured auto-selection; 1..3 = forced). The pipeline
-    * spec's `tuning.Fuzzy.block_width` override sets this. */
-  val WidthConfKey = "graft.fuzzy.blockWidth"
-
   /** Distinct packed-long trigrams of a string column: each char's code
     * point (< 2^21 for any Unicode scalar) packed into 21 bits of a
     * BIGINT — injective for ALL code points, never overflows. Strings
@@ -109,12 +104,6 @@ object FuzzyJoin {
       candsRaw: DataFrame, cands: DataFrame, verified: DataFrame,
       width: Int)
 
-  /** Outcome of the width-selection statistics pass. `f1` is the exact
-    * single-gram join fan-out over prefix-eligible grams; `f2` the
-    * pair-key fan-out estimate under prefix independence. */
-  private[graft] final case class WidthStats(
-      width: Int, vocab: Long, f1: Double, f2: Double, nl: Long, nr: Long)
-
   /** Estimated blocking fan-out per input record beyond which the
     * ladder widens the key — one bound per rung, calibrated against six
     * MEASURED corpora (the customer x supplier join on sf0.1 / ScaleUp
@@ -135,6 +124,21 @@ object FuzzyJoin {
   private[graft] val SingleGramBound = 256.0
   private[graft] val PairBound = 512.0
 
+  /** Per-gram per-side document frequencies — the ONE aggregate both the
+    * width statistics and the main plan's rarity order (`dfs`) derive
+    * from. PERSISTED by the caller: it is vocabulary-sized (bounded by
+    * the distinct-trigram universe), the stats action materializes it
+    * once, and every later plan reference (the rank joins reference the
+    * rarity order once per side) then reads the cache instead of
+    * re-exploding both tables. */
+  private[graft] def gramDfs(l: DataFrame, r: DataFrame): DataFrame =
+    l.select(explode(col("__lg")).as("__g"),
+        lit(1L).as("__cl"), lit(0L).as("__cr"))
+      .unionAll(r.select(explode(col("__rg")).as("__g"),
+        lit(0L).as("__cl"), lit(1L).as("__cr")))
+      .groupBy("__g").agg(sum("__cl").as("__dfl"), sum("__cr").as("__dfr"))
+      .withColumn("__tot", col("__dfl") + col("__dfr"))
+
   /** Pick the blocking width from the gram-frequency distribution:
     * two small jobs (one vocabulary-sized aggregate + one record
     * count), nothing per-pair.
@@ -153,25 +157,10 @@ object FuzzyJoin {
     * (bounded by the distinct-trigram universe, thousands to tens of
     * thousands), never over records.
     */
-  /** Per-gram per-side document frequencies — the ONE aggregate both the
-    * width statistics and the main plan's rarity order (`dfs`) derive
-    * from. PERSISTED by the caller: it is vocabulary-sized (bounded by
-    * the distinct-trigram universe), the stats action materializes it
-    * once, and every later plan reference (the rank joins reference the
-    * rarity order once per side) then reads the cache instead of
-    * re-exploding both tables. */
-  private[graft] def gramDfs(l: DataFrame, r: DataFrame): DataFrame =
-    l.select(explode(col("__lg")).as("__g"),
-        lit(1L).as("__cl"), lit(0L).as("__cr"))
-      .unionAll(r.select(explode(col("__rg")).as("__g"),
-        lit(0L).as("__cl"), lit(1L).as("__cr")))
-      .groupBy("__g").agg(sum("__cl").as("__dfl"), sum("__cr").as("__dfr"))
-      .withColumn("__tot", col("__dfl") + col("__dfr"))
-
   private[graft] def chooseWidth(l: DataFrame, r: DataFrame,
                                  num: Int, den: Int,
                                  occPre: DataFrame = null,
-                                 countsPre: Option[(Long, Long)] = None): WidthStats = {
+                                 countsPre: Option[(Long, Long)] = None): Int = {
     val occ = Option(occPre).getOrElse(gramDfs(l, r))
     val prefixMass = math.max(0.05, 1.0 - num.toDouble / den)
     val ordered = Window.orderBy(col("__tot"), col("__g"))
@@ -182,8 +171,7 @@ object FuzzyJoin {
       .withColumn("__cum", sum(col("__tot")).over(ordered))
       .withColumn("__all", sum(col("__tot")).over(whole))
       .where(col("__cum") <= col("__all") * prefixMass)
-      .agg(count(lit(1)).as("v"),
-        coalesce(sum(col("__dfl") * col("__dfr")), lit(0L)).as("f1"),
+      .agg(coalesce(sum(col("__dfl") * col("__dfr")), lit(0L)).as("f1"),
         coalesce(sum(pow(col("__dfl") * col("__dfr"), 2.0)), lit(0.0)).as("s2"))
       .head()
     // record counts only feed the estimator's denominators — callers
@@ -195,18 +183,15 @@ object FuzzyJoin {
         .collect().map(x => x.getInt(0) -> x.getLong(1)).toMap
       (counts.getOrElse(0, 0L), counts.getOrElse(1, 0L))
     }
-    val vocab = row.getLong(0)
-    val f1 = row.getAs[Number](1).doubleValue()
-    val s2 = row.getDouble(2)
+    val f1 = row.getAs[Number](0).doubleValue()
+    val s2 = row.getDouble(1)
     val f2 =
       if (nl == 0 || nr == 0) 0.0
       else math.max(0.0, f1 * f1 - s2) / (2.0 * nl * nr)
     val perRecord = math.max(1L, nl + nr).toDouble
-    val width =
-      if (f1 / perRecord <= SingleGramBound) 1
-      else if (f2 / perRecord <= PairBound) 2
-      else 3
-    WidthStats(width, vocab, f1, f2, nl, nr)
+    if (f1 / perRecord <= SingleGramBound) 1
+    else if (f2 / perRecord <= PairBound) 2
+    else 3
   }
 
   private[graft] def stages(left: DataFrame, lidCol: String, lnameCol: String,
@@ -246,18 +231,10 @@ object FuzzyJoin {
         } catch { case _: Exception => () }
       }
     }
-    // width precedence: explicit call arg > session conf (the product
-    // knob the pipeline spec's `tuning.Fuzzy.block_width` override sets —
-    // skips the stats pass entirely) > measured auto-selection
-    val confWidth = left.sparkSession.conf
-      .getOption(WidthConfKey).map(_.toInt).getOrElse(0)
-    require(confWidth >= 0 && confWidth <= 3,
-      s"$WidthConfKey must be 0 (auto) or 1..3, got $confWidth")
+    // an explicit width skips the stats pass; 0 = measured auto-selection
     val width =
       if (blockWidth > 0) blockWidth
-      else if (confWidth > 0) confWidth
-      else chooseWidth(l, r, num, den, occ,
-        Some((left.count(), right.count()))).width
+      else chooseWidth(l, r, num, den, occ, Some((left.count(), right.count())))
 
     // global gram rarity over BOTH tables: the one total order every
     // prefix derives from (read from the cached aggregate)

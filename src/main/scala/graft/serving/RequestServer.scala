@@ -19,7 +19,9 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * request-path semantics (window_request_operator.rs:90-300), never stale
   * by an emission interval. Keys with no buffered rows fall back to the
   * latest feature row from the [[FeatureStore]] the streaming query keeps
-  * upserting. Without `live`, lookups serve the store row directly.
+  * upserting, and concurrent live lookups drain into one evaluation pass
+  * through a [[RequestCoalescer]]. Without `live`, lookups serve the
+  * store row directly.
   * Unknown keys get 404; malformed payloads 400.
   *
   * Built on the JDK's HttpServer (no extra dependencies); JSON via
@@ -27,17 +29,17 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   */
 final class RequestServer(store: FeatureLookup, port: Int = 0,
                           live: Option[LiveBuffer] = None,
-                          coalesce: Boolean = false,
                           workers: Int = 8) {
 
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
 
   /** Live-path micro-burst coalescer (reference request batching,
-    * request_source.rs:38-49); present only when `coalesce` and a live
-    * buffer are wired. Exposed for bench/spec observability. */
-  val coalescer: Option[RequestCoalescer] =
-    if (coalesce) live.map(new RequestCoalescer(_)) else None
+    * request_source.rs:38-49); present whenever a live buffer is wired.
+    * At low concurrency its inline gate evaluates on the calling thread,
+    * so an idle server pays no queue hop. Exposed for bench/spec
+    * observability. */
+  val coalescer: Option[RequestCoalescer] = live.map(new RequestCoalescer(_))
 
   /** Starts the server; returns the actual bound port. */
   def start(): Int = {
@@ -97,22 +99,21 @@ final class RequestServer(store: FeatureLookup, port: Int = 0,
     if (key == null) { send(ex, 400, errJson("body must be {\"key\": \"...\"}")); return }
     // live path: re-evaluate the window aggregates at the request's virtual
     // point from buffered rows (reference request semantics); fall back to
-    // the last upserted feature row for keys with no buffer. With a
-    // coalescer wired, concurrent lookups ride one evalBatch pass.
+    // the last upserted feature row for keys with no buffer. Concurrent
+    // lookups ride one evalBatch pass through the coalescer.
     val liveResult =
       coalescer match {
         case Some(c) =>
           try c.submit(key, atTs).join()
           catch {
             // only a torn-down coalescer is a 503; an evaluation error is
-            // the server's bug and must surface as such, exactly like the
-            // non-coalesced path would
+            // the server's bug and must surface as such
             case e: Exception if rootCause(e).getMessage == "coalescer stopped" =>
               send(ex, 503, errJson("serving shutting down")); return
             case e: Exception =>
               send(ex, 500, errJson(s"evaluation failed: ${rootCause(e).getMessage}")); return
           }
-        case None => live.flatMap(_.eval(key, atTs))
+        case None => None
       }
     liveResult match {
       case Some((at, feats)) =>

@@ -164,28 +164,6 @@ object SlidingWindows {
           if (isString(s.kind)) StringType else DoubleType)))
 
   // ------------------------------------------------------------------
-  // Batch mode: plain Catalyst OVER windows (exact same semantics).
-  // ------------------------------------------------------------------
-
-  def batchSql(table: String, keyCol: String, tsCol: String, valueCol: String,
-               specs: Seq[AggSpec]): String = {
-    val cols = specs.map { s =>
-      val fn = s.kind match {
-        case "count" => s"count($valueCol)"
-        case k       => s"$k($valueCol)"
-      }
-      val frame = s.frame match {
-        case RangeMs(len) =>
-          s"(PARTITION BY $keyCol ORDER BY $tsCol RANGE BETWEEN $len PRECEDING AND CURRENT ROW)"
-        case RowsN(n) =>
-          s"(PARTITION BY $keyCol ORDER BY $tsCol, __seq ROWS BETWEEN $n PRECEDING AND CURRENT ROW)"
-      }
-      s"$fn OVER $frame AS ${s.name}"
-    }
-    s"SELECT $tsCol, $keyCol, $valueCol, ${cols.mkString(", ")} FROM $table"
-  }
-
-  // ------------------------------------------------------------------
   // Tiles and per-key state
   // ------------------------------------------------------------------
 
@@ -1028,22 +1006,6 @@ object SlidingWindows {
     grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)(stateEnc, outEnc)
   }
 
-  /** Single-value compatibility wrapper: output (ts_ms, key, value[, cate],
-    * specs...) as before. */
-  def streaming(df: DataFrame, keyCol: String, tsMsCol: String, valueCol: String,
-                specs: Seq[AggSpec], latenessMs: Long = 0,
-                tileGranularityMs: Long = 60000L,
-                cateCol: String = null,
-                coarseTilesMs: Seq[Long] = Nil): DataFrame = {
-    val hasCate = cateCol != null
-    val src = df.select(Seq(col(tsMsCol), col(keyCol),
-      col(valueCol).cast("double").as("value")) ++
-      (if (hasCate) Seq(col(cateCol).cast("string").as("cate")) else Nil): _*)
-    streamingMulti(src, keyCol, tsMsCol, Seq("value"),
-      if (hasCate) Seq("cate") else Nil, specs, latenessMs,
-      tileGranularityMs, coarseTilesMs)
-  }
-
   // ------------------------------------------------------------------
   // Batch mode through the same engine
   // ------------------------------------------------------------------
@@ -1080,25 +1042,6 @@ object SlidingWindows {
       }(outEnc)
   }
 
-  /** Single-value compatibility wrapper. */
-  def batchCompute(df: DataFrame, keyCol: String, tsMsCol: String,
-                   valueCol: String, specs: Seq[AggSpec],
-                   tileGranularityMs: Long = 60000L,
-                   cateCol: String = null,
-                   coarseTilesMs: Seq[Long] = Nil): DataFrame = {
-    val hasCate = cateCol != null
-    val src = df.select(Seq(col(tsMsCol), col(keyCol),
-      col(valueCol).cast("double").as("value")) ++
-      (if (hasCate) Seq(col(cateCol).cast("string").as("cate")) else Nil): _*)
-    batchComputeMulti(src, keyCol, tsMsCol, Seq("value"),
-      if (hasCate) Seq("cate") else Nil, specs, tileGranularityMs, coarseTilesMs)
-  }
-
-  /** The reference's default tile hierarchy: 1m / 5m / 1h / 1d
-    * (state/tiles.rs:104-112). Pass the tail as `coarseTilesMs` with a
-    * 1-minute finest granularity. */
-  val DefaultCoarseTilesMs: Seq[Long] = Seq(300000L, 3600000L, 86400000L)
-
   private[streaming] def tileGrans(finest: Long, coarse: Seq[Long]): Seq[Long] = {
     val grans = (finest +: coarse).distinct.sorted
     grans.foreach(g => require(g % grans.head == 0,
@@ -1108,11 +1051,6 @@ object SlidingWindows {
 
   /** One terminal-flush row per key (the reference's MAX_WATERMARK) for
     * bounded inputs: push the watermark past every real event. */
-  def flushRows(df: DataFrame, keyCol: String, tsMsCol: String, valueCol: String): DataFrame =
-    df.select(col(keyCol).cast("string").as(keyCol)).distinct()
-      .select(lit(FLUSH_TS).as(tsMsCol), col(keyCol), lit(0.0).as(valueCol))
-
-  /** Multi-slot variant of [[flushRows]]. */
   def flushRowsMulti(df: DataFrame, keyCol: String, tsMsCol: String,
                      valueCols: Seq[String], strCols: Seq[String]): DataFrame =
     df.select(col(keyCol).cast("string").as(keyCol)).distinct()

@@ -52,7 +52,12 @@ object StateStoreConf {
   /** RocksDB provider + the two measured fast-commit knobs: changelog
     * checkpointing (commit the per-batch delta, snapshot in background)
     * and trackTotalNumberOfRows=false (exact per-store row counts cost a
-    * get per put/delete and the engines never read them). */
+    * get per put/delete and the engines never read them). With row
+    * tracking off, Spark's RocksDB keeps no key count (`numKeys` is -1),
+    * and the negative value never reaches the operator's
+    * numTotalStateRows metric, so every progress on these sessions reports
+    * `numRowsTotal` 0: read state size from `memoryUsedBytes` or the
+    * `rocksdb*` custom metrics instead. */
   def setRocksDb(spark: SparkSession): Unit = {
     spark.conf.set(ProviderKey, RocksDbProvider)
     spark.conf.set(ChangelogKey, "true")

@@ -22,21 +22,6 @@ import graft.streaming.SlidingWindows.AggSpec
   */
 object StreamVerify {
 
-  /** @param input bounded frame with (tsMsCol LONG, keyCol STRING-castable,
-    *              valueCol DOUBLE-castable) columns.
-    * @return the engine output (ts_ms, key, value, one column per spec),
-    *         read back from the parquet sink.
-    */
-  def runBounded(spark: SparkSession, input: DataFrame, keyCol: String,
-                 tsMsCol: String, valueCol: String, specs: Seq[AggSpec],
-                 latenessMs: Long = 0, tileGranularityMs: Long = 60000L,
-                 checkpointDir: String = null,
-                 statePartitions: Int = 8): DataFrame =
-    runBoundedMulti(spark, input.select(
-        col(tsMsCol), col(keyCol), col(valueCol).cast("double").as("value")),
-      keyCol, tsMsCol, Seq("value"), Nil, specs, latenessMs, tileGranularityMs,
-      checkpointDir, statePartitions)
-
   /** Bounded run of a compiled SQL window query ([[graft.api.WindowSql]])
     * through the streaming engine — the path that exercises multi-column
     * PARTITION BY (composite engine key). Stages `input` as the compiled
@@ -86,9 +71,12 @@ object StreamVerify {
     spark.read.parquet(outDir)
   }
 
-  /** Multi-slot variant: `valueCols` are numeric slots (cast double),
-    * `strCols` string slots. Output columns follow the engine contract
-    * (ts_ms, key, valueCols..., strCols..., one per spec). */
+  /** @param input bounded frame with (tsMsCol LONG, keyCol STRING-castable)
+    *              columns; `valueCols` are numeric slots (cast double),
+    *              `strCols` string slots.
+    * @return the engine output (ts_ms, key, valueCols..., strCols..., one
+    *         column per spec), read back from the parquet sink.
+    */
   def runBoundedMulti(spark: SparkSession, input: DataFrame, keyCol: String,
                       tsMsCol: String, valueCols: Seq[String], strCols: Seq[String],
                       specs: Seq[AggSpec],

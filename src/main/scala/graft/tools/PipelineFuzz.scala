@@ -118,7 +118,7 @@ object PipelineFuzz {
   /** One REQUEST-mode document (VERDICT r17 #6): a random OVER-window
     * query compiled through the spec loader into the request-serving
     * tail (engine -> upsert store + live buffer -> HTTP server), with
-    * random sharded/coalesce knobs, then random point-in-time lookups
+    * a random shard count, then random point-in-time lookups
     * against the live endpoint compared to [[bruteAsOf]]. Draw points sit
     * ON one of the key's own events, so every frame provably holds at
     * least one row (an empty frame's NaN doesn't round-trip JSON —
@@ -135,8 +135,7 @@ object PipelineFuzz {
       (ts, s"k${r.nextInt(nKeys)}", r.nextInt(1000) / 4.0)
     }
     val spanMs = rows.last._1 - base
-    val sharded = r.nextInt(3) == 0
-    val coalesce = r.nextBoolean()
+    val numShards = 2 + r.nextInt(4)
     val gran = Seq(1000L, 5000L, 60000L)(r.nextInt(3))
     val kinds = Seq("sum", "avg", "min", "max", "count")
     // anchor spec: a RANGE wider than the corpus span, so the serving
@@ -163,15 +162,14 @@ object PipelineFuzz {
     val sql = s"SELECT ts_ms, key, $aggSql FROM $view"
     val root = GraftSession.tempDir(s"graft_pfr_${i}_")
     rows.toDF("ts_ms", "key", "value").coalesce(1).write.parquet(s"$root/in")
-    val shardedJson =
-      if (sharded) s""", "sharded": {"num_shards": ${2 + r.nextInt(4)}}""" else ""
     val spec = s"""{
       "execution_mode": "Request",
       "event_time": { "window": {"allowed_lateness_ms": ${spanMs + 3600000L}} },
       "window": { "tile_granularity_ms": $gran },
       "sources": [ { "table_name": "$view", "source": { "Parquet": {"path": "$root/in"} } } ],
       "sql": ${graft.Metrics.toJson(sql)},
-      "request_source_sink": { "bind_address": "127.0.0.1:0", "coalesce": $coalesce$shardedJson }
+      "request_source_sink": { "bind_address": "127.0.0.1:0",
+                               "sharded": {"num_shards": $numShards} }
     }"""
     val handle = Pipeline.runJson(spark, spec)
     try {
@@ -201,7 +199,7 @@ object PipelineFuzz {
           val got = fo.get(name).asDouble()
           if (java.lang.Double.compare(got, want) != 0)
             return Some(s"$key@$at $name: http=$got brute=$want " +
-              s"(sharded=$sharded coalesce=$coalesce)")
+              s"(num_shards=$numShards)")
         }
       }
       None
@@ -427,7 +425,7 @@ object PipelineFuzz {
     val what =
       if (family == "request")
         "random REQUEST-mode pipeline-spec documents through api.Pipeline.runJson " +
-          "(OVER-window SQL x sharded/coalesce serving knobs), live " +
+          "(OVER-window SQL x shard counts), live " +
           "HTTP point-in-time lookups compared exactly against the brute-force " +
           "as-of oracle (family H's compare, driven from the spec loader)"
       else

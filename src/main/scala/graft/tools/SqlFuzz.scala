@@ -444,16 +444,14 @@ object SqlFuzz {
       spark.read.parquet(s"$sfDir/${t.name}.parquet").createOrReplaceTempView(t.name)
     val pools = samplePools(spark, sfDir)
 
-    val manifest = new StringBuilder("{\n")
-    var first = true
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifest = mapper.createObjectNode()
     var failed = 0
     for (i <- 0 until n) {
       val (name, sql) = gen(i, seedBase, pools)
       try {
         spark.sql(sql).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        if (!first) manifest.append(",\n")
-        first = false
-        manifest.append(s"""  "$name": ${ujsonStr(sql)}""")
+        manifest.put(name, sql)
         if (i % 25 == 0) println(s"[fuzz] $name ok  seed=${seedBase + i}")
       } catch {
         case e: Exception =>
@@ -461,23 +459,13 @@ object SqlFuzz {
           println(s"[fuzz] SPARK-SIDE FAIL $name seed=${seedBase + i}: ${e.getMessage.take(300)}\n  $sql")
       }
     }
-    manifest.append("\n}\n")
-    java.nio.file.Files.write(
+    java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/fuzz_sql.json"),
-      manifest.toString.getBytes("UTF-8"))
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(manifest))
     println(s"[fuzz] wrote ${n - failed}/$n queries to $outDir (seedBase=$seedBase)")
     // stop BEFORE a failure exit so the listener bus drains and temp dirs
     // are cleaned instead of relying on JVM shutdown hooks
     spark.stop()
     if (failed > 0) sys.exit(2)
   }
-
-  private def ujsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -555,8 +555,8 @@ object StreamFuzz {
     // values sampled from the normalized stream columns
     val (pools, evT, types) = eventPools(spark)
 
-    val manifest = new StringBuilder("{\n")
-    var first = true
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifest = mapper.createObjectNode()
     var failed = 0
     for (i <- 0 until n) {
       val shape =
@@ -565,9 +565,7 @@ object StreamFuzz {
       try {
         shape.run(spark).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/${shape.name}")
-        if (!first) manifest.append(",\n")
-        first = false
-        manifest.append(s"""  "${shape.name}": ${jsonStr(shape.oracle)}""")
+        manifest.put(shape.name, shape.oracle)
         if (i % 10 == 0) println(s"[streamfuzz] ${shape.name} ok  seed=${seedBase + i}")
       } catch {
         case e: Exception =>
@@ -576,21 +574,11 @@ object StreamFuzz {
             s"${Option(e.getMessage).getOrElse(e.getClass.getName).take(400)}")
       }
     }
-    manifest.append("\n}\n")
-    java.nio.file.Files.write(
+    java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/fuzz_sql.json"),
-      manifest.toString.getBytes("UTF-8"))
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(manifest))
     println(s"[streamfuzz] wrote ${n - failed}/$n queries to $outDir (seedBase=$seedBase)")
     spark.stop()
     if (failed > 0) sys.exit(2)
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -56,8 +56,8 @@ class CheckpointRecoverySpec extends AnyFunSuite {
 
     val mem = MemoryStream[(Long, String, Double)]
     val src = mem.toDF().toDF("ts_ms", "key", "value")
-    val out = SlidingWindows.streaming(src,
-      "key", "ts_ms", "value", specs, latenessMs = 0, tileGranularityMs = 2000)
+    val out = SlidingWindows.streamingMulti(src,
+      "key", "ts_ms", Seq("value"), Nil, specs, latenessMs = 0, tileGranularityMs = 2000)
 
     def start() = out.writeStream.outputMode("append").format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt)

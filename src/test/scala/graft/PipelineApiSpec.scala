@@ -108,33 +108,20 @@ class PipelineApiSpec extends AnyFunSuite {
     } finally handle.stop()
   }
 
-  test("freshness_target_ms derives the trigger interval; trigger_ms stays explicit; both errors") {
+  test("trigger_ms sets the trigger interval; absent means ProcessingTime(0)") {
     import com.fasterxml.jackson.databind.ObjectMapper
     import org.apache.spark.sql.streaming.Trigger
     val mapper = new ObjectMapper()
     def trig(json: String) = Pipeline.specTrigger(mapper.readTree(json))
-    // explicit cadence passes through
     assert(trig("""{"trigger_ms": 1500}""") == Trigger.ProcessingTime(1500))
-    // neither field: as-fast-as-possible harness default
     assert(trig("""{}""") == Trigger.ProcessingTime(0))
-    // the README policy: p50 ≈ 2 trigger periods => trigger = target/2
-    assert(trig("""{"freshness_target_ms": 6000}""") == Trigger.ProcessingTime(3000))
-    // below the knee (2 x floor, default floor 600): clamp, don't thrash
-    assert(trig("""{"freshness_target_ms": 1000}""") == Trigger.ProcessingTime(1200))
-    // a deployment's own measured floor moves the knee
-    assert(trig("""{"freshness_target_ms": 1000, "trigger_floor_ms": 100}""") ==
-      Trigger.ProcessingTime(500))
-    // conflicting knobs fail loudly
-    val e = intercept[RuntimeException](
-      trig("""{"trigger_ms": 1000, "freshness_target_ms": 2000}"""))
-    assert(e.getMessage.contains("either trigger_ms or freshness_target_ms"))
-    // and the derived trigger reaches a REAL streaming query
+    // and the interval reaches a REAL streaming query
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, Double)]
     val spec = """{
       "execution_mode": "Streaming",
-      "freshness_target_ms": 6000,
+      "trigger_ms": 3000,
       "sources": [ { "table_name": "ev_fr", "source": { "Memory": {} } } ],
       "sql": "SELECT ts_ms, key, value FROM ev_fr",
       "sink": { "Memory": {"table_name": "fresh_out"} }
@@ -209,7 +196,7 @@ class PipelineApiSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
-  test("spec-level knobs: state_store_provider + Fuzzy block_width set the session confs") {
+  test("spec-level knob: state_store_provider sets the session conf") {
     import spark.implicits._
     GraftSession.prepare(spark, null)
     import graft.streaming.StateStoreConf
@@ -220,9 +207,6 @@ class PipelineApiSpec extends AnyFunSuite {
       val spec = s"""{
         "execution_mode": "Batch",
         "state_store_provider": "rocksdb",
-        "operator_overrides": {
-          "per_operator": { "fz": {
-            "tuning": { "Fuzzy": { "block_width": 2 } } } } },
         "sources": [ { "table_name": "knob_src",
                        "source": { "Parquet": {"path": "$dir/in"} } } ],
         "sql": "SELECT count(*) AS n FROM knob_src",
@@ -231,24 +215,7 @@ class PipelineApiSpec extends AnyFunSuite {
       Pipeline.runJson(spark, spec).stop()
       assert(spark.conf.get(StateStoreConf.ProviderKey) ==
         StateStoreConf.RocksDbProvider)
-      assert(spark.conf.get(graft.operators.FuzzyJoin.WidthConfKey) == "2")
-      // ...and an auto-mode jaccardJoin honors the forced width (the
-      // stats pass is skipped; the rung is the conf's)
-      val l = Seq((1L, "alpha bravo carbon"), (2L, "delta epsilon fox"))
-        .toDF("lid", "lname")
-      val r = Seq((10L, "alpha bravo carbons"), (20L, "unrelated text here"))
-        .toDF("rid", "rname")
-      val st = graft.operators.FuzzyJoin.stages(
-        l, "lid", "lname", r, "rid", "rname", 1, 3, blockWidth = 0)
-      assert(st.width == 2, s"conf width not honored: got ${st.width}")
-      // explicit call arg still wins over the conf
-      val st3 = graft.operators.FuzzyJoin.stages(
-        l, "lid", "lname", r, "rid", "rname", 1, 3, blockWidth = 3)
-      assert(st3.width == 3)
-    } finally {
-      StateStoreConf.restore(spark, saved)
-      spark.conf.unset(graft.operators.FuzzyJoin.WidthConfKey)
-    }
+    } finally StateStoreConf.restore(spark, saved)
   }
 
   /** Runs a windowed Streaming spec (`fields` spliced in) on a fresh
@@ -305,16 +272,31 @@ class PipelineApiSpec extends AnyFunSuite {
     }
   }
 
-  test("a spec carrying the removed engine field is rejected at parse time") {
-    val before = spark.streams.active.length
-    val err = intercept[RuntimeException](Pipeline.runJson(spark, """{
-      "execution_mode": "Streaming", "engine": "fmgws",
-      "sources": [ { "table_name": "eng_ev", "source": { "Memory": {} } } ],
-      "sql": "SELECT 1 AS one FROM eng_ev",
-      "sink": { "Memory": {"table_name": "eng_out"} }
-    }"""))
-    assert(err.getMessage.contains("one engine"), err.getMessage)
-    assert(spark.streams.active.length == before, "a query started anyway")
+  test("every removed spec field is rejected at parse time, before a query starts") {
+    def spec(mode: String, fields: String) = s"""{
+      "execution_mode": "$mode", $fields
+      "sources": [ { "table_name": "gone_ev", "source": { "Memory": {} } } ],
+      "sql": "SELECT ts_ms, key, sum(value) OVER (PARTITION BY key ORDER BY ts_ms RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW) AS s FROM gone_ev",
+      "sink": { "Memory": {"table_name": "gone_out"} }
+    }"""
+    Seq(
+      "engine" -> spec("Streaming", """"engine": "fmgws","""),
+      "freshness_target_ms" -> spec("Streaming", """"freshness_target_ms": 6000,"""),
+      "trigger_floor_ms" -> spec("Streaming", """"trigger_floor_ms": 100,"""),
+      "tuning.Fuzzy.block_width" -> spec("Streaming", """"operator_overrides":
+        {"per_operator": {"fz": {"tuning": {"Fuzzy": {"block_width": 2}}}}},"""),
+      "request_source_sink.coalesce" -> spec("Request",
+        """"request_source_sink": {"coalesce": false},""")
+    ).foreach { case (name, json) =>
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(Long, String, Double)]
+      val before = spark.streams.active.length
+      val err = intercept[RuntimeException](Pipeline.runJson(spark, json,
+        tables = Map("gone_ev" -> mem.toDF().toDF("ts_ms", "key", "value"))))
+      assert(err.getMessage.contains(s"\"$name\" field is gone"), err.getMessage)
+      assert(spark.streams.active.length == before, s"$name: a query started anyway")
+    }
   }
 
   test("Datagen source: field generators produce the declared columns deterministically") {
@@ -424,6 +406,10 @@ class PipelineApiSpec extends AnyFunSuite {
     val handle = Pipeline.runJson(spark, spec,
       tables = Map("ev_req" -> mem.toDF().toDF("ts_ms", "key", "value")))
     try {
+      // no `sharded` block: the serving tail is sharded anyway
+      import graft.serving.{ShardedFeatureStore, ShardedServingBuffer}
+      assert(handle.store.exists(_.isInstanceOf[ShardedFeatureStore]), handle.store)
+      assert(handle.buffer.exists(_.isInstanceOf[ShardedServingBuffer]), handle.buffer)
       val events = (0 until 200).map(i => (1704067200000L + 500L * i, s"u${i % 3}", (i % 9) / 4.0))
       events.grouped(80).foreach { b => mem.addData(b: _*); handle.query.get.processAllAvailable() }
       val keys = events.map(_._2).distinct
@@ -451,8 +437,7 @@ class PipelineApiSpec extends AnyFunSuite {
         assert(resp.statusCode() == 200, s"key $k")
         assert(resp.body().contains(s""""sum_10s":${want(k)}"""), s"key $k: ${resp.body()}")
       }
-      // the spec's coalesce flag reached the server: every live lookup
-      // above rode the coalescer queue
+      // every live lookup above rode the server's coalescer
       val co = handle.server.get.coalescer
       assert(co.isDefined && co.get.requests == keys.length.toLong)
     } finally handle.stop()

@@ -52,8 +52,7 @@ class RequestCoalescerSpec extends AnyFunSuite {
 
   test("concurrent distinct-key HTTP burst: correct answers, coalesced evaluation") {
     val buf = filledBuffer()
-    val server = new RequestServer(new FeatureStore, 0, Some(buf),
-      coalesce = true, workers = 16)
+    val server = new RequestServer(new FeatureStore, 0, Some(buf), workers = 16)
     val port = server.start()
     try {
       val client = HttpClient.newHttpClient()

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.serving.{FeatureStore, RequestServer, RequestServing}
+import graft.serving.{FeatureStore, RequestServer, RequestServing, ShardedFeatureStore}
 import graft.streaming.SlidingWindows
 import graft.streaming.SlidingWindows.{AggSpec, RangeMs, RowsN}
 
@@ -42,8 +42,8 @@ class RequestServingSpec extends AnyFunSuite {
     val store = new FeatureStore
 
     val mem = MemoryStream[(Long, String, Double)]
-    val out = SlidingWindows.streaming(mem.toDF().toDF("ts_ms", "key", "value"),
-      "key", "ts_ms", "value", specs, latenessMs = 0, tileGranularityMs = 2000)
+    val out = SlidingWindows.streamingMulti(mem.toDF().toDF("ts_ms", "key", "value"),
+      "key", "ts_ms", Seq("value"), Nil, specs, latenessMs = 0, tileGranularityMs = 2000)
     val q = out.writeStream.outputMode("append")
       .foreachBatch(FeatureStore.upsertBatch(store, "key", "ts_ms") _)
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -103,13 +103,14 @@ class RequestServingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import graft.api.Pipeline
     val mem = MemoryStream[(Long, String, Double)]
-    val spec = """{
+    val root = GraftSession.tempDir("graft_live_req_")
+    val spec = s"""{
       "execution_mode": "Request",
       "sources": [ { "table_name": "ev_live", "source": { "Memory": {} } } ],
       "window": { "key_column": "key", "ts_column": "ts_ms", "value_column": "value",
                   "tile_granularity_ms": 2000,
                   "aggs": [ {"name": "sum_10s", "kind": "sum", "range_ms": 10000} ] },
-      "request_source_sink": { "bind_address": "127.0.0.1:0" }
+      "request_source_sink": { "bind_address": "127.0.0.1:0", "sharded": {"root": "$root"} }
     }"""
     val handle = Pipeline.runJson(spark, spec,
       tables = Map("ev_live" -> mem.toDF().toDF("ts_ms", "key", "value")))
@@ -160,7 +161,8 @@ class RequestServingSpec extends AnyFunSuite {
       assert(pit.body().contains(s""""sum_10s":${sumAt(atMid)}"""), pit.body())
 
       // keys with no buffered rows fall back to the upsert store row
-      handle.store.get.asInstanceOf[FeatureStore].upsert("manual", 42L, Map("sum_10s" -> 9.5))
+      ShardedFeatureStore.upsertBatch(s"$root/store", 8, "key", "ts_ms")(
+        Seq(("manual", 42L, 9.5)).toDF("key", "ts_ms", "sum_10s"), 0L)
       val fb = post("""{"key": "manual"}""")
       assert(fb.statusCode() == 200 && fb.body().contains(""""sum_10s":9.5"""), fb.body())
       assert(!fb.body().contains(""""live":true"""))
@@ -344,8 +346,8 @@ class RequestServingSpec extends AnyFunSuite {
     // engine path (mapGroupsWithState emission at the atTs row)
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, Double)]
-    val out = SlidingWindows.streaming(mem.toDF().toDF("ts_ms", "key", "value"),
-      "key", "ts_ms", "value", spec, latenessMs = 0, tileGranularityMs = 2000)
+    val out = SlidingWindows.streamingMulti(mem.toDF().toDF("ts_ms", "key", "value"),
+      "key", "ts_ms", Seq("value"), Nil, spec, latenessMs = 0, tileGranularityMs = 2000)
     val sink = new scala.collection.mutable.ArrayBuffer[(Long, Double)]
     val q = out.writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>

@@ -59,8 +59,8 @@ class ShardedFeatureStoreSpec extends AnyFunSuite {
       (1704067200000L + 500L * i, s"u${i % 16}", (i % 17) / 4.0)
     }
     val mem = MemoryStream[(Long, String, Double)]
-    val out = SlidingWindows.streaming(mem.toDF().toDF("ts_ms", "key", "value"),
-      "key", "ts_ms", "value", specs, latenessMs = 0, tileGranularityMs = 2000)
+    val out = SlidingWindows.streamingMulti(mem.toDF().toDF("ts_ms", "key", "value"),
+      "key", "ts_ms", Seq("value"), Nil, specs, latenessMs = 0, tileGranularityMs = 2000)
     val q = out.writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
         b.persist()

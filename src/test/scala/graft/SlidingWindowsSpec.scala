@@ -73,7 +73,7 @@ class SlidingWindowsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, Double)]
     val df = mem.toDF().toDF("ts_ms", "key", "value")
-    val out = SlidingWindows.streaming(df, "key", "ts_ms", "value", specs,
+    val out = SlidingWindows.streamingMulti(df, "key", "ts_ms", Seq("value"), Nil, specs,
       latenessMs = lateness, tileGranularityMs = tileGran)
     val qname = s"slwin_out_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
@@ -215,9 +215,9 @@ class SlidingWindowsSpec extends AnyFunSuite {
 
   test("batchCompute (tiled sweep) == batch OVER for stddev/var + ML aggregates") {
     import spark.implicits._
-    val got = SlidingWindows.batchCompute(
+    val got = SlidingWindows.batchComputeMulti(
         cateEvents.toDF("ts_ms", "key", "value", "cate"),
-        "key", "ts_ms", "value", mlSpecs, tileGranularityMs = 3000, cateCol = "cate")
+        "key", "ts_ms", Seq("value"), Seq("cate"), mlSpecs, tileGranularityMs = 3000)
       .collect().map(mlRow).toSet
     assert(got == mlReference())
   }
@@ -229,8 +229,8 @@ class SlidingWindowsSpec extends AnyFunSuite {
     val batches = cateEvents.sortBy(_._1).grouped(80).toSeq.map(b => rnd.shuffle(b))
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Double, String)]
     val df = mem.toDF().toDF("ts_ms", "key", "value", "cate")
-    val out = SlidingWindows.streaming(df, "key", "ts_ms", "value", mlSpecs,
-      latenessMs = 60000, tileGranularityMs = 3000, cateCol = "cate")
+    val out = SlidingWindows.streamingMulti(df, "key", "ts_ms", Seq("value"), Seq("cate"),
+      mlSpecs, latenessMs = 60000, tileGranularityMs = 3000)
     val qname = s"slwin_ml_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName(qname).trigger(Trigger.ProcessingTime(0)).start()
@@ -279,8 +279,8 @@ class SlidingWindowsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(seed)
     val batches = rnd.shuffle(evs).sortBy(_._1).grouped(100).toSeq.map(b => rnd.shuffle(b))
     val mem = MemoryStream[(Long, String, Double)]
-    val out = SlidingWindows.streaming(mem.toDF().toDF("ts_ms", "key", "value"),
-      "key", "ts_ms", "value", longSpecs, latenessMs = 60000,
+    val out = SlidingWindows.streamingMulti(mem.toDF().toDF("ts_ms", "key", "value"),
+      "key", "ts_ms", Seq("value"), Nil, longSpecs, latenessMs = 60000,
       tileGranularityMs = 2000, coarseTilesMs = Seq(10000, 60000))
     val qname = s"slwin_tile_${System.nanoTime()}"
     val q = out.writeStream.outputMode("append").format("memory")
@@ -303,8 +303,8 @@ class SlidingWindowsSpec extends AnyFunSuite {
     val evs = events
     val want = longFrameReference(evs)
     // batch sweep with hierarchy
-    val gotBatch = SlidingWindows.batchCompute(evs.toDF("ts_ms", "key", "value"),
-        "key", "ts_ms", "value", longSpecs, tileGranularityMs = 2000,
+    val gotBatch = SlidingWindows.batchComputeMulti(evs.toDF("ts_ms", "key", "value"),
+        "key", "ts_ms", Seq("value"), Nil, longSpecs, tileGranularityMs = 2000,
         coarseTilesMs = Seq(10000, 60000))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
         R.r6(r.getDouble(3)), r.getDouble(4), r.getDouble(5), r.getString(6))).toSet

@@ -156,7 +156,7 @@ class WindowSqlSpec extends AnyFunSuite {
 
     // batch sweep through the engine
     val c = WindowSql.compile(spark, flagSql).fold(e => fail(e), identity)
-    val gotBatch = c.run(spark.table("orders_ml"), tileGranularityMs = 2000,
+    val gotBatch = c.runWith(Map(c.table -> spark.table("orders_ml")), tileGranularityMs = 2000,
         useBatchSweep = true)
       .collect().map(shape(_, cntLong = false)).toSet
     assert(gotBatch == want, "batch engine sweep")
@@ -211,7 +211,7 @@ class WindowSqlSpec extends AnyFunSuite {
         R.r6(r.getDouble(4)), if (cntLong) r.getLong(5).toDouble else r.getDouble(5),
         r.getString(6))
     val want = spark.sql(mSql).collect().map(shape(_, cntLong = true)).toSet
-    val gotBatch = c.run(spark.table("mk_evt"), tileGranularityMs = 2000,
+    val gotBatch = c.runWith(Map(c.table -> spark.table("mk_evt")), tileGranularityMs = 2000,
         useBatchSweep = true)
       .collect().map(shape(_, cntLong = false)).toSet
     assert(gotBatch == want, "batch engine sweep (composite key)")
@@ -264,7 +264,7 @@ class WindowSqlSpec extends AnyFunSuite {
       (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3),
         R.r6(r.getDouble(4)), if (cntLong) r.getLong(5).toDouble else r.getDouble(5))
     val want = spark.sql(eSql).collect().map(shape(_, cntLong = true)).toSet
-    val gotBatch = c.run(spark.table("px_evt"), tileGranularityMs = 2000,
+    val gotBatch = c.runWith(Map(c.table -> spark.table("px_evt")), tileGranularityMs = 2000,
         useBatchSweep = true)
       .collect().map(shape(_, cntLong = false)).toSet
     assert(gotBatch == want, "batch engine sweep (expression key)")
@@ -307,7 +307,8 @@ class WindowSqlSpec extends AnyFunSuite {
     }
     rows.toDF("ts_ms", "uid", "etype", "value").createOrReplaceTempView("arg_evt")
     val c = WindowSql.compile(spark, aSql).fold(e => fail(e), identity)
-    val got = c.run(spark.table("arg_evt"), tileGranularityMs = 2000, useBatchSweep = true)
+    val got = c.runWith(Map(c.table -> spark.table("arg_evt")), tileGranularityMs = 2000,
+      useBatchSweep = true)
     assert(got.schema("uid").dataType == org.apache.spark.sql.types.LongType,
       s"uid must restore to LONG, got ${got.schema("uid").dataType}")
     def shape(r: org.apache.spark.sql.Row) =
